@@ -16,6 +16,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from ._base import KEY_ARTIFACTS, ScaleRefusal
+from ._memo import ARTIFACTS
 from . import (
     analytic_q,
     dedup_q,
@@ -82,31 +83,21 @@ for _k in _FB:
         assert _chain not in _seen, f"fallback cycle through {_k}"
         _seen.add(_chain)
 
-# Build-order dependencies BETWEEN shared artifacts (VERDICT r9 #6):
-# a key declaring `artifacts={"ngram_pairs"}` at its @q registration
-# transitively consumes shingle_evidence and shingles too — the
-# closure lives HERE, next to warm_shared_artifacts' build order, so
-# each registration only declares what its code directly touches.
+# every artifact a key declares (``@q(..., artifacts={...})``) is a
+# declared artifact — a typo'd name would silently never match a
+# warm-skip set. Parents are checked where each artifact is declared
+# (``_memo.artifact``: declared, and declared before the child).
+assert set().union(*KEY_ARTIFACTS.values()) <= set(ARTIFACTS), (
+    set().union(*KEY_ARTIFACTS.values()) - set(ARTIFACTS)
+)
+
+# Build-order dependencies BETWEEN shared artifacts (VERDICT r9 #6),
+# as declared by each ``@artifact(name, parents=...)``: a key declaring
+# `artifacts={"ngram_pairs"}` transitively consumes shingle_evidence
+# and shingles too, so each registration only declares what its code
+# directly touches.
 ARTIFACT_PARENTS: dict[str, frozenset[str]] = {
-    "shingle_evidence": frozenset({"shingles"}),
-    "capped_evidence": frozenset({"shingles"}),
-    "ngram_pairs": frozenset({"shingle_evidence", "shingles"}),
-    "minhash_pairs": frozenset({"shingles"}),
-    # the MLlib interop key's TF features + fitted MinHashLSH model
-    # (r14); its warm builder also reads the shared df profile to
-    # refuse where the key would
-    "mllib_model": frozenset({"shingles"}),
-    "ivf_model": frozenset({"unit_vectors"}),
-    # the memoized 1-row query probe reads the checkpointed unit frame
-    "query_vec": frozenset({"unit_vectors"}),
-    # batch_model delegates to the shared fixed-k model at driver
-    # scales, so it transitively needs both
-    "batch_model": frozenset({"unit_vectors", "ivf_model"}),
-    # the residual PQ variant trains on assign_cells residuals
-    "pq_codebooks": frozenset({"unit_vectors", "ivf_model"}),
-    # the kNN probe-budget pre-flight samples the unit frame and
-    # ranks cells of the batch quantizer
-    "knn_probe": frozenset({"unit_vectors", "ivf_model", "batch_model"}),
+    name: art.parents for name, art in ARTIFACTS.items()
 }
 
 
@@ -122,95 +113,25 @@ def key_artifact_deps(key: str) -> frozenset[str]:
         if a in out:
             continue
         out.add(a)
-        frontier.extend(ARTIFACT_PARENTS.get(a, frozenset()))
+        frontier.extend(ARTIFACT_PARENTS[a])
     return frozenset(out)
-
-# Driver-evidence rotation, self-managing: the driver's correctness
-# harness checks only the FIRST 50 keys of queries() each round, so the
-# registry orders itself least-evidenced-first — keys with the fewest
-# banked GREEN driver rows (counted from the CORRECTNESS_r*.json files
-# the driver leaves at the repo root) lead, name order breaking ties.
-# Every round therefore banks up to 50 new driver rows with no manual
-# window edits, sweeping the whole registry in ceil(n/50) rounds.
-# Only green evidence banks: a key whose LATEST evidence is a failed
-# or errored row sorts BEFORE even never-checked keys (rank -1) so the
-# (hopefully fixed) key is re-checked next round — latest, not
-# ever-green: a key that regressed after an early green round must
-# still lead the window, or it would never be re-checked. A rows-only
-# 'no_oracle' row only counts for keys that still have no oracle — if
-# a key gained one since, the stale weak row shouldn't keep the
-# stronger check out of the window. Order only affects which keys the
-# driver samples; the local oracle suite checks every key every run.
-
-
-def _driver_row_counts(oracle_keys: set[str]) -> dict[str, int]:
-    import json
-    import re
-    from pathlib import Path
-
-    counts: dict[str, int] = {}
-    latest_green: dict[str, bool] = {}
-    root = Path(__file__).resolve().parents[2]
-
-    def round_no(f: Path) -> int:
-        # NUMERIC round order (ADVICE r4): lexicographic filename sort
-        # would put r100 before r20 and let a stale row overwrite the
-        # true latest status once rounds outgrow the zero-padding
-        m = re.search(r"r(\d+)", f.name)
-        return int(m.group(1)) if m else -1
-
-    # ascending round order: per-key overwrite leaves the LATEST status
-    for f in sorted(root.glob("CORRECTNESS_r*.json"), key=round_no):
-        try:
-            rows = json.loads(f.read_text())
-        except (OSError, ValueError):
-            continue
-        for key, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            err = row.get("err")
-            flags = [
-                row.get("rows_match"), row.get("schema_match"),
-                row.get("hash_match"),
-            ]
-            green = (err is None and False not in flags) or (
-                err == "no_oracle" and key not in oracle_keys
-            )
-            if green:
-                counts[key] = counts.get(key, 0) + 1
-            latest_green[key] = green
-    for key, green in latest_green.items():
-        if not green:
-            counts[key] = -1
-    return counts
-
-
-_BANKED = _driver_row_counts(set(ORACLE))
-# tie-break within a bank count: oracle-backed keys first — a driver
-# row for them is a hash-grade check, vs rows-only for no-oracle keys
-QUERIES = {
-    k: QUERIES[k]
-    for k in sorted(QUERIES, key=lambda k: (_BANKED.get(k, 0), k not in ORACLE, k))
-}
 
 
 def warm_shared_artifacts(
     spark: SparkSession,
     sf_dir: str,
     skip: frozenset[str] = frozenset(),
-    parallel: int | None = None,
+    parallel: int = 6,
 ) -> dict[str, float]:
-    """Pre-materialize every session-memoized corpus-snapshot artifact
-    and return per-artifact build seconds (VERDICT r5 #2: the bench
-    previously charged each artifact to whichever key touched it
-    first, so per-key deltas across rounds were attribution shifts,
-    not plan changes). Each builder is an eager localCheckpoint (or a
-    driver-side model fit), so timing the cached accessor times the
-    real build; a second call is a cache hit and costs ~nothing.
-
-    Order matters only for attribution *within* this dict: evidence
-    consumes shingles, the IVF model consumes unit vectors, so each
-    entry's time is the marginal cost given its predecessors.
+    """Pre-materialize every shared artifact (``_memo.ARTIFACTS``: each
+    ``@artifact``-declared accessor, in declaration order) and return
+    per-artifact build seconds (VERDICT r5 #2: the bench previously
+    charged each artifact to whichever key touched it first, so per-key
+    deltas across rounds were attribution shifts, not plan changes).
+    Each build is an eager localCheckpoint (or a driver-side model
+    fit), so timing the accessor times the real build; a second call
+    is a cache hit and costs ~nothing. Every build's Spark jobs carry
+    the description ``warm_shared_artifacts: <name>``.
 
     An artifact whose build REFUSES (its own probe-and-refuse guard —
     e.g. shingle_evidence at sf3skew) is recorded under
@@ -228,113 +149,29 @@ def warm_shared_artifacts(
     incur. bench.py never passes skip — the full registry consumes
     everything.
 
-    ``parallel``: max builders in flight (default
-    ``$SPARK_GRAFT_WARM_PARALLEL`` or 6). The builders form two
-    independent chains (shingles -> evidence/minhash -> ngram;
-    unit_vectors -> ivf -> pq/batch -> knn_probe) plus the standalone
-    tb_marts, so independent builds overlap (guide §2.6: actions are
+    ``parallel``: max builds in flight (clamped to 1..8). The artifacts
+    form two independent chains (shingles -> evidence/minhash -> ngram;
+    unit_vectors -> ivf -> pq/batch -> knn_probe) plus standalone
+    builds, so independent builds overlap (guide §2.6: actions are
     only sequential because the driver calls them sequentially) and
-    the phase wall drops to roughly its critical path. Dependency
-    order within a chain is enforced from ``ARTIFACT_PARENTS`` — the
-    same closure the bench and scale probes already consume — so a
-    child never races its parent's memoized build. ``parallel=1``
-    keeps the exact sequential behavior, where each entry's seconds
-    are its MARGINAL cost given its predecessors (scale-probe
-    attribution mode); in parallel mode per-entry seconds are
-    contended wall times that can overlap, so callers must report the
-    phase wall, not the sum."""
+    the phase wall drops to roughly its critical path. A build starts
+    only after its declared parents finish, so a child never races its
+    parent's memoized build. The default 6 (r14): shingles has FIVE
+    children competing for slots, and at 4 one child of the hot chain
+    always queued behind the others (interleaved A/B, fresh sessions:
+    wall 23.5/29.7 s at 4 vs 19.4/23.3 s at 6). ``parallel=1`` builds
+    sequentially in declaration order (a topological order), where
+    each entry's seconds are its MARGINAL cost given its predecessors
+    (scale-probe attribution mode); in parallel mode per-entry seconds
+    are contended wall times that can overlap, so callers must report
+    the phase wall, not the sum."""
+    import sys
     import time
 
-    builders = [
-        ("shingles", lambda: dedup_q.shingles_cached(spark, sf_dir).count()),
-        (
-            "shingle_evidence",
-            lambda: dedup_q.shingle_evidence_cached(spark, sf_dir).count(),
-        ),
-        # the df-capped bounded-tier evidence (optimization r13):
-        # shared by all three dfcap keys; unlike shingle_evidence it
-        # never refuses — the cap bounds its join by construction
-        (
-            "capped_evidence",
-            lambda: dedup_q.capped_evidence_cached(spark, sf_dir).count(),
-        ),
-        (
-            "minhash_pairs",
-            lambda: dedup_q.minhash_pairs_cached(spark, sf_dir).count(),
-        ),
-        # the hamming-verified simhash edge list (optimization r13):
-        # the fingerprint/band index a pipeline maintains per snapshot,
-        # exactly like minhash_pairs above — without warming, the
-        # two-level banding build re-ran on every dedup_simhash call
-        (
-            "simhash_pairs",
-            lambda: dedup_q.simhash_pairs_cached(spark, sf_dir).count(),
-        ),
-        # the MLlib interop features+model (optimization r14): the
-        # pca_model discipline — deterministic per snapshot, linear to
-        # build, re-paid per call (and per routed-facade call) without
-        # this; the builder refuses exactly where the key would
-        (
-            "mllib_model",
-            lambda: dedup_q.warm_mllib_model(spark, sf_dir),
-        ),
-        ("ngram_pairs", lambda: dedup_q.ngram_pairs_cached(spark, sf_dir).count()),
-        (
-            "unit_vectors",
-            lambda: similarity_q.unit_vectors_cached(spark, sf_dir).count(),
-        ),
-        ("ivf_model", lambda: similarity_q.ivf_centroids_cached(spark, sf_dir)),
-        # the single-query ANN keys' memoized 1-row probe (r14) — a
-        # sub-0.2 s build, warmed so min-of-runs never hides it
-        ("query_vec", lambda: similarity_q.query_unit_cached(spark, sf_dir)),
-        # ADVICE r6 #1: PQ codebooks (plain + residual) and the batch
-        # quantizer are memoized exactly like the IVF model — without
-        # warming them here their training hides in run 0 of the
-        # min-of-runs protocol and appears in NO reported number
-        (
-            "pq_codebooks",
-            lambda: similarity_q.warm_pq_codebooks(spark, sf_dir),
-        ),
-        (
-            "batch_model",
-            lambda: similarity_q.batch_centroids_cached(spark, sf_dir),
-        ),
-        # the kNN probe-budget pre-flight (VERDICT r9 #1): index-build
-        # state exactly like the model — a no-op at fixed-k scales
-        # (returns the KNN_PROBE default), one exact-sample corpus
-        # scan in the grown-k regime, memoized per snapshot
-        (
-            "knn_probe",
-            lambda: similarity_q.knn_probe_cached(spark, sf_dir),
-        ),
-        # the fitted PCA basis (optimization r13): model-sized like the
-        # IVF/PQ models above; without warming, embed_pca re-paid the
-        # fit's two corpus passes on every call
-        (
-            "pca_model",
-            lambda: training_q.pca_model_cached(spark, sf_dir),
-        ),
-        ("tb_marts", lambda: pipeline_q.synthetic_marts(spark)),
-    ]
-    import os
-    import sys
-
-    # default 6 (r14): with the mllib_model builder, shingles has FIVE
-    # children competing for slots — at 4 one child of the hot chain
-    # always queues behind the others (interleaved A/B, fresh sessions:
-    # with-mllib wall 23.5/29.7 s at 4 vs 19.4/23.3 s at 6; the
-    # without-mllib baseline is 19.4/19.9 s). 4 vs 6 vs 8 was a wash
-    # before the 15th builder existed (the r14 change-10 A/B).
-    if parallel is None:
-        try:
-            parallel = int(os.environ.get("SPARK_GRAFT_WARM_PARALLEL", "6"))
-        except ValueError:
-            parallel = 6
     parallel = max(1, min(parallel, 8))
-
     out: dict[str, float] = {}
 
-    def run_one(name: str, build) -> None:
+    def run_one(name: str) -> None:
         """Build one artifact, recording seconds (or '<name>!refused').
 
         A refusing artifact must not strand the REST of the warm
@@ -350,7 +187,7 @@ def warm_shared_artifacts(
         t0 = time.perf_counter()
         spark.sparkContext.setJobDescription(f"warm_shared_artifacts: {name}")
         try:
-            build()
+            ARTIFACTS[name].accessor(spark, sf_dir)
         except ScaleRefusal as exc:
             print(f"[warm] {name} refused: {exc}", file=sys.stderr)
             out[f"{name}!refused"] = round(time.perf_counter() - t0, 3)
@@ -359,18 +196,16 @@ def warm_shared_artifacts(
             spark.sparkContext.setJobDescription(None)
         out[name] = round(time.perf_counter() - t0, 3)
 
-    active = [(n, b) for n, b in builders if n not in skip]
+    pending = [n for n in ARTIFACTS if n not in skip]  # declared order
     if parallel == 1:
-        for name, build in active:
-            run_one(name, build)
+        for name in pending:
+            run_one(name)
         return out
 
     from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor
     from concurrent.futures import wait as futures_wait
 
-    present = {n for n, _ in active}
-    pending = [n for n, _ in active]  # declared order = submit preference
-    fns = dict(active)
+    present = set(pending)
     done: set[str] = set()
     first_error: BaseException | None = None
     with ThreadPoolExecutor(max_workers=parallel) as pool:
@@ -380,13 +215,11 @@ def warm_shared_artifacts(
                 # a skipped parent never blocks (the child's accessor
                 # builds it inline, exactly as in the sequential path)
                 ready = [
-                    n
-                    for n in pending
-                    if (ARTIFACT_PARENTS.get(n, frozenset()) & present) <= done
+                    n for n in pending if (ARTIFACT_PARENTS[n] & present) <= done
                 ]
                 for n in ready:
                     pending.remove(n)
-                    inflight[pool.submit(run_one, n, fns[n])] = n
+                    inflight[pool.submit(run_one, n)] = n
             if not inflight:
                 break  # hard error drained, or nothing runnable
             finished, _ = futures_wait(

@@ -54,18 +54,15 @@ def local_values_df(spark, rows, cols_ddl: str):
     return spark.sql(f"SELECT * FROM VALUES {body} AS t({names})")
 
 # key -> frozenset of session-memoized shared-artifact names the key's
-# query lazily consumes (the names warm_shared_artifacts builds:
-# shingles, shingle_evidence, minhash_pairs, ngram_pairs, unit_vectors,
-# ivf_model, pq_codebooks, batch_model, knn_probe, tb_marts).
+# query directly consumes (names declared with ``_memo.artifact``).
 # Declared AT REGISTRATION via ``@q(key, artifacts={...})`` so the
 # dependency lives next to the code that creates it — VERDICT r9 #6:
 # tools/scale_probe.py previously hand-maintained a parallel copy of
 # this map, and an unmapped key probing with --skip-warm would lazily
 # trigger the skipped (possibly quadratic-by-contract) build inside
-# its timed run. TRANSITIVE closure is the declarer's responsibility:
-# ngram_pairs is built FROM shingle_evidence, which is built from
-# shingles — a consumer of ngram_pairs declares all three. Global
-# across modules (keys are globally unique, asserted in __init__).
+# its timed run. ``registry.key_artifact_deps`` closes the set over
+# the artifacts' declared parents. Global across modules (keys are
+# globally unique, asserted in __init__).
 KEY_ARTIFACTS: dict[str, frozenset] = {}
 
 # key -> the registry key of the BOUNDED tier of the same question,

@@ -1,5 +1,6 @@
 """Session-scoped memoization for corpus-snapshot artifacts (LSH pair
-lists, marts) that several registry keys share.
+lists, marts) that several registry keys share, and the registry of
+those artifacts.
 
 Keys on ``spark.sparkContext.applicationId`` — unique per SparkSession
 for the JVM's lifetime — NOT ``id(spark)``: Python recycles object ids,
@@ -7,12 +8,21 @@ so an id-keyed cache can serve localCheckpoint DataFrames bound to a
 stopped session after its id is reused. Entries from any other
 application are evicted on access, so a restarted session cannot grow
 the cache without bound or pin a dead session's checkpoint blocks.
+
+Each shared artifact is declared once, by decorating its
+``build(spark, sf_dir)`` with :func:`artifact`. The declaration is the
+artifact's memo (a registered snapshot-keyed cache), its parents in the
+build graph and its warm-phase entry: ``ARTIFACTS`` lists them in
+declaration order, and ``registry.warm_shared_artifacts`` /
+``registry.key_artifact_deps`` read nothing else.
 """
 
 from __future__ import annotations
 
+import functools
 import threading
 from collections.abc import Callable
+from dataclasses import dataclass
 from pathlib import Path
 
 from pyspark.sql import SparkSession
@@ -144,3 +154,66 @@ def session_memo(
     val = build()
     with _MEMO_LOCK:
         return cache.setdefault(key, val)
+
+
+@dataclass(frozen=True)
+class Artifact:
+    """One shared artifact: the artifacts its build reads, and the
+    accessor every consumer calls."""
+
+    parents: frozenset[str]
+    accessor: Callable[[SparkSession, str], object]
+
+
+# name (the ``@q(artifacts=...)`` and warm-phase name) -> Artifact, in
+# declaration order. A parent must be declared before its child, so
+# this order is a topological order of the build graph (the sequential
+# warm phase relies on it).
+ARTIFACTS: dict[str, Artifact] = {}
+
+
+def artifact(
+    name: str,
+    parents=(),
+    extra: Callable[[], tuple] | None = None,
+    memo: bool = True,
+):
+    """Declare a shared artifact: decorates ``build(spark, sf_dir)``
+    and returns its accessor.
+
+    The accessor is ``build`` behind :func:`snapshot_memo` on a cache
+    registered for :func:`release_snapshot`. ``extra()`` is called on
+    every access and joins the memo key, so it names the module-level
+    hyperparameters the build reads (looked up at call time: a
+    monkeypatched constant re-keys the artifact). ``memo=False``
+    registers ``build`` as the accessor unchanged, for an artifact that
+    owns a memo of another shape (the session-scoped TB marts, the kNN
+    probe selection whose env override is read per call)."""
+    parents = frozenset(parents)
+    assert name not in ARTIFACTS, f"artifact {name!r} declared twice"
+    assert parents <= set(ARTIFACTS), (
+        f"artifact {name!r}: parent(s) {sorted(parents - set(ARTIFACTS))} "
+        "not declared before it"
+    )
+
+    def deco(build):
+        if not memo:
+            ARTIFACTS[name] = Artifact(parents, build)
+            return build
+        cache = register_cache({})
+
+        @functools.wraps(build)
+        def accessor(spark: SparkSession, sf_dir: str):
+            return snapshot_memo(
+                cache,
+                spark,
+                sf_dir,
+                lambda: build(spark, sf_dir),
+                extra=extra() if extra is not None else (),
+            )
+
+        accessor.cache = cache
+        ARTIFACTS[name] = Artifact(parents, accessor)
+        return accessor
+
+    return deco

@@ -30,7 +30,6 @@ against the exact-Jaccard oracle at sf0.001.
 
 from __future__ import annotations
 
-import os
 import sys
 import warnings
 
@@ -38,8 +37,9 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.graphs import connected_components
+from ..session import env_int
 from ..sources.readers import load_table
-from ._memo import register_cache, snapshot_memo
+from ._memo import artifact, register_cache, snapshot_memo
 
 from ._base import ScaleRefusal, make_registry
 
@@ -209,26 +209,17 @@ WHERE n_common * {_CONTAIN_DEN} >= {_CONTAIN_NUM} * LEAST(sa.n, sb.n)
 )
 
 
-_SHINGLES_CACHE: dict = register_cache({})
-
-
+@artifact("shingles")
 def shingles_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus shingle frame, memoized per (session, sf_dir) and
     eagerly checkpointed — four keys (containment, exact-jaccard
     pairs, incremental probe, MLlib minhash) consume the identical
     tokenization; a real pipeline materializes the shingle index once
     per corpus snapshot (same pattern as ngram_pairs_cached below)."""
-    return snapshot_memo(
-        _SHINGLES_CACHE,
-        spark,
-        sf_dir,
-        lambda: _shingles(load_table(spark, sf_dir, "documents")).localCheckpoint(
-            eager=True
-        ),
+    return _shingles(load_table(spark, sf_dir, "documents")).localCheckpoint(
+        eager=True
     )
 
-
-_EVIDENCE_CACHE: dict = register_cache({})
 
 # shingle document frequencies above this trip a loud audit warning at
 # evidence-build time: a shingle present in m documents contributes
@@ -345,6 +336,7 @@ def shingle_df_profile(sh: DataFrame) -> dict:
     }
 
 
+@artifact("shingle_evidence", parents={"shingles"})
 def shingle_evidence_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_a, doc_b, n_common, na, nb) for every doc pair sharing at
     least one shingle — the inverted-index self-join + size join that
@@ -355,92 +347,87 @@ def shingle_evidence_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the cluster/graph consumers in one session executes the
     expensive shared-shingle join exactly once (previously containment
     re-ran its own copy-pasted join)."""
-
-    def build() -> DataFrame:
-        # every join side here is CORPUS-sized (the shingle frame and
-        # the per-doc size frame), so each join carries an explicit
-        # MERGE hint: a localCheckpoint frame reports a bogus tiny
-        # sizeInBytes (measured 2.6 MiB for 2.6M string rows at the
-        # 10x probe scale), which statically planned a BROADCAST of
-        # the corpus side and OOMed the driver — the exact failure a
-        # 100 TB run would hit. Sort-merge shuffles on the join key,
-        # spills instead of OOMing, and AQE's skew-join splitting
-        # still applies (round-6 scale-probe finding).
-        sh = shingles_cached(spark, sf_dir)
-        # df AUDIT before the join (VERDICT r6 #3): the exact evidence
-        # join is quadratic in each shingle's document frequency, and
-        # a boilerplate-heavy corpus detonates it silently — one
-        # profile pass makes the hazard loud before the cost is paid.
-        # The capped tier (dedup_ngram_dfcap / the banded minhash
-        # table) is the production escape hatch; this EXACT frame is
-        # the oracle surface and stays uncapped by contract. Cached
-        # per snapshot (round 10) so refused retries / fallback hops
-        # re-price at lookup cost.
-        profile = shingle_df_profile_cached(spark, sf_dir)
-        print(f"[shingle_evidence] df profile {sf_dir}: {profile}", file=sys.stderr)
-        # PROBE-AND-REFUSE above the pair budget (VERDICT r7 #4): the
-        # audit already computed the exact pre-aggregation row count
-        # of the self-join; past the budget the build refuses with the
-        # bounded tiers named, instead of warning and then detonating
-        # (the warn-only path let a 189 s / 64 g build start by
-        # accident at sf3skew). Env override for deliberate oracle
-        # runs, read at BUILD time so a probe can flip it per run.
-        env_cap = os.environ.get("SPARK_GRAFT_EVIDENCE_PAIRS_CAP")
-        budget = int(env_cap) if env_cap is not None else EVIDENCE_PAIRS_BUDGET
-        if budget and audit_exceeds_budget(
-            profile["pairs_bound"],
-            profile["pairs_bound_dbl"],
-            profile["max_df"],
-            budget,
-        ):
-            raise ScaleRefusal(
-                f"shingle_evidence: the exact inverted-index self-join "
-                f"would generate {profile['pairs_bound']} candidate "
-                f"pairs (> budget {budget}; max_df="
-                f"{profile['max_df']}) — boilerplate-heavy corpus, the "
-                "uncapped build is quadratic in shingle df by declared "
-                "contract. Route near-dup through dedup_ngram_dfcap "
-                "(df-capped evidence, precision-1 lower-bound Jaccard) "
-                "or dedup_minhash_lsh (banded, BUCKET_CAP), or set "
-                "SPARK_GRAFT_EVIDENCE_PAIRS_CAP=0 (unlimited) for a "
-                "deliberate oracle run.",
-                key="shingle_evidence",
-                measured=profile["pairs_bound"],
-                budget=budget,
-                alternative="dedup_minhash_lsh",
-                override_env="SPARK_GRAFT_EVIDENCE_PAIRS_CAP",
-            )
-        if profile["max_df"] > _DF_WARN:
-            warnings.warn(
-                f"shingle df audit: max_df={profile['max_df']} (> {_DF_WARN}) "
-                f"bounds the exact evidence self-join at "
-                f"{profile['pairs_bound']} candidate pairs — boilerplate-"
-                "heavy corpus; route near-dup through dedup_ngram_dfcap "
-                "or the banded minhash table (dedup_minhash_lsh) instead "
-                "of the exact evidence frame",
-                stacklevel=2,
-            )
-        sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-        a, b = sh.alias("a"), sh.alias("b")
-        inter = (
-            a.hint("merge")
-            .join(
-                b.hint("merge"),
-                (F.col("a.s") == F.col("b.s"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-            .agg(F.count(F.lit(1)).alias("n_common"))
+    # every join side here is CORPUS-sized (the shingle frame and
+    # the per-doc size frame), so each join carries an explicit
+    # MERGE hint: a localCheckpoint frame reports a bogus tiny
+    # sizeInBytes (measured 2.6 MiB for 2.6M string rows at the
+    # 10x probe scale), which statically planned a BROADCAST of
+    # the corpus side and OOMed the driver — the exact failure a
+    # 100 TB run would hit. Sort-merge shuffles on the join key,
+    # spills instead of OOMing, and AQE's skew-join splitting
+    # still applies (round-6 scale-probe finding).
+    sh = shingles_cached(spark, sf_dir)
+    # df AUDIT before the join (VERDICT r6 #3): the exact evidence
+    # join is quadratic in each shingle's document frequency, and
+    # a boilerplate-heavy corpus detonates it silently — one
+    # profile pass makes the hazard loud before the cost is paid.
+    # The capped tier (dedup_ngram_dfcap / the banded minhash
+    # table) is the production escape hatch; this EXACT frame is
+    # the oracle surface and stays uncapped by contract. Cached
+    # per snapshot (round 10) so refused retries / fallback hops
+    # re-price at lookup cost.
+    profile = shingle_df_profile_cached(spark, sf_dir)
+    print(f"[shingle_evidence] df profile {sf_dir}: {profile}", file=sys.stderr)
+    # PROBE-AND-REFUSE above the pair budget (VERDICT r7 #4): the
+    # audit already computed the exact pre-aggregation row count
+    # of the self-join; past the budget the build refuses with the
+    # bounded tiers named, instead of warning and then detonating
+    # (the warn-only path let a 189 s / 64 g build start by
+    # accident at sf3skew). Env override for deliberate oracle
+    # runs, read at BUILD time so a probe can flip it per run.
+    budget = env_int("SPARK_GRAFT_EVIDENCE_PAIRS_CAP", EVIDENCE_PAIRS_BUDGET)
+    if budget and audit_exceeds_budget(
+        profile["pairs_bound"],
+        profile["pairs_bound_dbl"],
+        profile["max_df"],
+        budget,
+    ):
+        raise ScaleRefusal(
+            f"shingle_evidence: the exact inverted-index self-join "
+            f"would generate {profile['pairs_bound']} candidate "
+            f"pairs (> budget {budget}; max_df="
+            f"{profile['max_df']}) — boilerplate-heavy corpus, the "
+            "uncapped build is quadratic in shingle df by declared "
+            "contract. Route near-dup through dedup_ngram_dfcap "
+            "(df-capped evidence, precision-1 lower-bound Jaccard) "
+            "or dedup_minhash_lsh (banded, BUCKET_CAP), or set "
+            "SPARK_GRAFT_EVIDENCE_PAIRS_CAP=0 (unlimited) for a "
+            "deliberate oracle run.",
+            key="shingle_evidence",
+            measured=profile["pairs_bound"],
+            budget=budget,
+            alternative="dedup_minhash_lsh",
+            override_env="SPARK_GRAFT_EVIDENCE_PAIRS_CAP",
         )
-        na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-        nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-        return (
-            inter.join(na.hint("merge"), "doc_a")
-            .join(nb.hint("merge"), "doc_b")
-            .localCheckpoint(eager=True)
+    if profile["max_df"] > _DF_WARN:
+        warnings.warn(
+            f"shingle df audit: max_df={profile['max_df']} (> {_DF_WARN}) "
+            f"bounds the exact evidence self-join at "
+            f"{profile['pairs_bound']} candidate pairs — boilerplate-"
+            "heavy corpus; route near-dup through dedup_ngram_dfcap "
+            "or the banded minhash table (dedup_minhash_lsh) instead "
+            "of the exact evidence frame",
+            stacklevel=2,
         )
-
-    return snapshot_memo(_EVIDENCE_CACHE, spark, sf_dir, build)
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    a, b = sh.alias("a"), sh.alias("b")
+    inter = (
+        a.hint("merge")
+        .join(
+            b.hint("merge"),
+            (F.col("a.s") == F.col("b.s"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+    na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
+    nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
+    return (
+        inter.join(na.hint("merge"), "doc_a")
+        .join(nb.hint("merge"), "doc_b")
+        .localCheckpoint(eager=True)
+    )
 
 
 @q(
@@ -523,9 +510,7 @@ WHERE CAST(n_common AS DOUBLE) / (sa.n + sb.n - n_common) >= {JACCARD_THRESHOLD}
 """
 
 
-_CAPPED_EVIDENCE_CACHE: dict = register_cache({})
-
-
+@artifact("capped_evidence", parents={"shingles"})
 def capped_evidence_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_a, doc_b, n_common, na, nb) over the DF_CAP-filtered
     shingle frame — the bounded-tier analogue of
@@ -540,39 +525,35 @@ def capped_evidence_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum min(df, DF_CAP)^2 rows by construction — bounded-by-design is
     the reason this tier exists. MERGE hints for the same
     misreported-checkpoint-stats reason as the uncapped build."""
-
-    def build() -> DataFrame:
-        sh = shingles_cached(spark, sf_dir)
-        sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-        rare = (
-            sh.groupBy("s")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") <= DF_CAP)
-            .select("s")
+    sh = shingles_cached(spark, sf_dir)
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    rare = (
+        sh.groupBy("s")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .filter(F.col("df") <= DF_CAP)
+        .select("s")
+    )
+    capped = sh.hint("merge").join(rare.hint("merge"), "s")
+    a, b = capped.alias("a"), capped.alias("b")
+    inter = (
+        a.hint("merge")
+        .join(
+            b.hint("merge"),
+            (F.col("a.s") == F.col("b.s"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
-        capped = sh.hint("merge").join(rare.hint("merge"), "s")
-        a, b = capped.alias("a"), capped.alias("b")
-        inter = (
-            a.hint("merge")
-            .join(
-                b.hint("merge"),
-                (F.col("a.s") == F.col("b.s"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .groupBy(
-                F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-            )
-            .agg(F.count(F.lit(1)).alias("n_common"))
+        .groupBy(
+            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
         )
-        na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-        nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-        return (
-            inter.join(na.hint("merge"), "doc_a")
-            .join(nb.hint("merge"), "doc_b")
-            .localCheckpoint(eager=True)
-        )
-
-    return snapshot_memo(_CAPPED_EVIDENCE_CACHE, spark, sf_dir, build)
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+    na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
+    nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
+    return (
+        inter.join(na.hint("merge"), "doc_a")
+        .join(nb.hint("merge"), "doc_b")
+        .localCheckpoint(eager=True)
+    )
 
 
 @q("dedup_ngram_dfcap", _DFCAP_ORACLE, artifacts={"capped_evidence"})
@@ -875,9 +856,7 @@ def minhash_verified_pairs(docs: DataFrame, shingles: DataFrame | None = None) -
     )
 
 
-_MINHASH_CACHE: dict = register_cache({})
-
-
+@artifact("minhash_pairs", parents={"shingles"})
 def minhash_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``minhash_verified_pairs`` memoized per (session, sf_dir) and
     eagerly checkpointed — the LSH edge list is the same
@@ -885,15 +864,10 @@ def minhash_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     key and the cluster key consume it, and a real pipeline
     materializes it once per snapshot rather than re-signing the
     corpus per query."""
-    return snapshot_memo(
-        _MINHASH_CACHE,
-        spark,
-        sf_dir,
-        lambda: minhash_verified_pairs(
-            load_table(spark, sf_dir, "documents"),
-            shingles=shingles_cached(spark, sf_dir),
-        ).localCheckpoint(eager=True),
-    )
+    return minhash_verified_pairs(
+        load_table(spark, sf_dir, "documents"),
+        shingles=shingles_cached(spark, sf_dir),
+    ).localCheckpoint(eager=True)
 
 
 @q("dedup_minhash_lsh", artifacts={"minhash_pairs"})  # no portable-SQL oracle: rows-only check + pytest recall test
@@ -1195,9 +1169,7 @@ def simhash_edges(docs: DataFrame, cap: int = BUCKET_CAP) -> DataFrame:
     )
 
 
-_SIMHASH_PAIRS_CACHE: dict = register_cache({})
-
-
+@artifact("simhash_pairs")
 def simhash_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``simhash_edges`` memoized per (session, sf_dir) and eagerly
     checkpointed — the hamming-verified simhash edge list is the same
@@ -1206,13 +1178,8 @@ def simhash_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     rather than re-fingerprinting the corpus per query (optimization
     r13; the two-level banding build was ~2.8 s warm of the key's
     ~4 s at sf0.1, re-paid on every bench run)."""
-    return snapshot_memo(
-        _SIMHASH_PAIRS_CACHE,
-        spark,
-        sf_dir,
-        lambda: simhash_edges(
-            load_table(spark, sf_dir, "documents")
-        ).localCheckpoint(eager=True),
+    return simhash_edges(load_table(spark, sf_dir, "documents")).localCheckpoint(
+        eager=True
     )
 
 
@@ -1366,8 +1333,7 @@ def dedup_embedding(
         .filter(F.col("label").isNotNull() & F.col("vec_id").isNotNull())
     )
     if pairs_cap is None:
-        env_cap = os.environ.get("SPARK_GRAFT_EMB_PAIRS_CAP")
-        cap = int(env_cap) if env_cap is not None else EMB_PAIRS_BUDGET
+        cap = env_int("SPARK_GRAFT_EMB_PAIRS_CAP", EMB_PAIRS_BUDGET)
     else:
         cap = pairs_cap
     if cap:
@@ -1522,9 +1488,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PAIRS_CACHE: dict = register_cache({})
-
-
+@artifact("ngram_pairs", parents={"shingle_evidence", "shingles"})
 def ngram_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The exact near-dup pair list, memoized per (session, sf_dir)
     and eagerly checkpointed. The similarity graph is a corpus-level
@@ -1533,23 +1497,15 @@ def ngram_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     once per corpus snapshot and serves every downstream graph query
     off it, rather than re-shingling the corpus per query — the memo
     models that shape (same pattern as pipeline_q.synthetic_marts)."""
-    return snapshot_memo(
-        _PAIRS_CACHE,
-        spark,
-        sf_dir,
-        lambda: _ngram_jaccard_pairs(spark, sf_dir).localCheckpoint(eager=True),
-    )
-
-
-_MLLIB_CACHE: dict = register_cache({})
+    return _ngram_jaccard_pairs(spark, sf_dir).localCheckpoint(eager=True)
 
 
 def _mllib_guard(spark: SparkSession, sf_dir: str) -> None:
     """``dedup_mllib_minhash``'s probe-and-refuse pre-flight (round 9,
-    VERDICT r8 #1), extracted so the warm builder prices the corpus the
-    same way the key does before building anything."""
-    env_cap = os.environ.get("SPARK_GRAFT_MLLIB_PAIRS_CAP")
-    budget = int(env_cap) if env_cap is not None else EVIDENCE_PAIRS_BUDGET
+    VERDICT r8 #1), shared with the model build so the warm phase
+    prices the corpus the same way the key does before building
+    anything."""
+    budget = env_int("SPARK_GRAFT_MLLIB_PAIRS_CAP", EVIDENCE_PAIRS_BUDGET)
     if not budget:
         return
     profile = shingle_df_profile_cached(spark, sf_dir)
@@ -1579,6 +1535,7 @@ def _mllib_guard(spark: SparkSession, sf_dir: str) -> None:
         )
 
 
+@artifact("mllib_model", parents={"shingles"})
 def mllib_model_cached(spark: SparkSession, sf_dir: str):
     """(binary-TF features frame, fitted MinHashLSH model) for the
     MLlib interop key, memoized per corpus snapshot — the pca_model /
@@ -1588,30 +1545,22 @@ def mllib_model_cached(spark: SparkSession, sf_dir: str):
     insensitive, the LSH coefficients are seed-pinned), yet re-ran on
     every call of the key and its routed facade. The
     ``approxSimilarityJoin`` — the query itself — still runs per call.
-    Build is linear in the corpus (no pair enumeration), so warming it
-    is safe even where the key's own guard would refuse the join."""
+    The build runs the key's own guard first, so it refuses (the warm
+    phase records ``mllib_model!refused``) exactly where the key would
+    and a guarded corpus never pays even the linear build for a join
+    that will not run."""
     from pyspark.ml.feature import HashingTF, MinHashLSH
 
-    def build():
-        sh = shingles_cached(spark, sf_dir)
-        sets = sh.groupBy("doc_id").agg(F.collect_set("s").alias("sh"))
-        feats = HashingTF(
-            inputCol="sh", outputCol="features", binary=True, numFeatures=1 << 18
-        ).transform(sets).localCheckpoint(eager=True)  # fit + self-join reuse
-        model = MinHashLSH(
-            inputCol="features", outputCol="hashes", numHashTables=8, seed=7
-        ).fit(feats)
-        return feats, model
-
-    return snapshot_memo(_MLLIB_CACHE, spark, sf_dir, build)
-
-
-def warm_mllib_model(spark: SparkSession, sf_dir: str) -> None:
-    """Warm-phase entry: refuse (recorded as ``mllib_model!refused``)
-    exactly where the key itself would, so a guarded corpus never pays
-    even the linear build for a join that will not run."""
     _mllib_guard(spark, sf_dir)
-    mllib_model_cached(spark, sf_dir)
+    sh = shingles_cached(spark, sf_dir)
+    sets = sh.groupBy("doc_id").agg(F.collect_set("s").alias("sh"))
+    feats = HashingTF(
+        inputCol="sh", outputCol="features", binary=True, numFeatures=1 << 18
+    ).transform(sets).localCheckpoint(eager=True)  # fit + self-join reuse
+    model = MinHashLSH(
+        inputCol="features", outputCol="hashes", numHashTables=8, seed=7
+    ).fit(feats)
+    return feats, model
 
 
 @q("dedup_mllib_minhash", artifacts={"mllib_model"}, fallback="dedup_minhash_lsh")  # approximate: rows-only driver check + pytest recall test
@@ -1834,8 +1783,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     precision-1 lower-bound Jaccard) as the bounded tier;
     SPARK_GRAFT_INCREMENTAL_PAIRS_CAP=0 for a deliberate oracle run."""
     sh = shingles_cached(spark, sf_dir)
-    env_cap = os.environ.get("SPARK_GRAFT_INCREMENTAL_PAIRS_CAP")
-    budget = int(env_cap) if env_cap is not None else EVIDENCE_PAIRS_BUDGET
+    budget = env_int("SPARK_GRAFT_INCREMENTAL_PAIRS_CAP", EVIDENCE_PAIRS_BUDGET)
     if budget:
         profile = incremental_probe_profile_cached(spark, sf_dir)
         # max_term is an exact bigint PRODUCT (n_delta * n_base <=

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from ..plans.tb_pipeline import run_tb_pipeline, summarize
 from ..sources.synthetic import _BASE_RATES, _POPULATIONS
-from ._memo import session_memo
+from ._memo import artifact, session_memo
 from .relational import _SYN_DIM
 
 from ._base import make_registry
@@ -113,18 +113,22 @@ def synthetic_tb_inputs(spark: SparkSession) -> tuple[DataFrame, DataFrame]:
     return tb_raw, pop_raw
 
 
+# deliberately NOT snapshot-keyed: the marts read no corpus, so one
+# build serves every sf_dir in the session
 _MARTS_CACHE: dict = {}
 
 
-def synthetic_marts(spark: SparkSession):
+@artifact("tb_marts", memo=False)
+def synthetic_marts(spark: SparkSession, sf_dir: str | None = None):
     """The four TB marts over the synthetic inputs, memoized per
-    SparkSession. Nine registry keys (tb_pipeline + the serve_* family)
-    consume these marts; without memoization each key re-plans and
-    re-executes the pivot/join pipeline — a serving layer builds its
-    marts once and answers many queries off them, so the cache models
-    the real deployment shape. Mart DataFrames are eagerly
-    localCheckpoint-ed: the data is mart-scale tiny (60 rows) and
-    checkpointing cuts the pivot's value-discovery job from every
+    SparkSession; ``sf_dir`` is accepted for the artifact accessor
+    signature and ignored. Nine registry keys (tb_pipeline + the
+    serve_* family) consume these marts; without memoization each key
+    re-plans and re-executes the pivot/join pipeline — a serving layer
+    builds its marts once and answers many queries off them, so the
+    cache models the real deployment shape. Mart DataFrames are
+    eagerly localCheckpoint-ed: the data is mart-scale tiny (60 rows)
+    and checkpointing cuts the pivot's value-discovery job from every
     downstream query plan."""
     def build():
         tb_raw, pop_raw = synthetic_tb_inputs(spark)

@@ -25,10 +25,11 @@ import sys
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import env_int
 from ..sources.readers import load_table
 
 from ._base import ScaleRefusal, make_registry
-from ._memo import register_cache
+from ._memo import artifact, register_cache, snapshot_memo
 
 QUERIES, ORACLE, q = make_registry()
 
@@ -66,36 +67,7 @@ def _norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
 
 
-_UNIT_CACHE: dict = register_cache({})
-_CENTROID_CACHE: dict = register_cache({})
-_QUERY_VEC_CACHE: dict = register_cache({})
-
-
-def query_unit_cached(spark: SparkSession, sf_dir: str) -> list[float]:
-    """The normalized query vector (vec_id == QUERY_VEC_ID) memoized
-    per corpus snapshot (optimization r14): every single-query ANN key
-    (ann_ivf, ann_pq, ann_ivf_pq) re-ran the same 1-row filter+collect
-    job per call — a deterministic snapshot scalar exactly like the
-    stream pre-flight scalars memoized in r13. Values are the
-    checkpointed unit frame's own (JVM-normalized) doubles, so every
-    consumer sees bit-identical coordinates."""
-    from ._memo import snapshot_memo
-
-    return snapshot_memo(
-        _QUERY_VEC_CACHE,
-        spark,
-        sf_dir,
-        lambda: [
-            float(x)
-            for x in unit_vectors_cached(spark, sf_dir)
-            .filter(F.col("vec_id") == QUERY_VEC_ID)
-            .select("v")
-            .collect()[0]
-            .v
-        ],
-    )
-
-
+@artifact("unit_vectors")
 def unit_vectors_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The eagerly-checkpointed unit-vector frame, memoized per
     (session, sf_dir): ann_ivf / ann_ivf_pq / ann_knn_join /
@@ -105,16 +77,33 @@ def unit_vectors_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     the snapshot FINGERPRINT, not just the path, so a rewritten
     sf_dir within one session rebuilds instead of serving the stale
     checkpoint (ADVICE r5 #4)."""
-    from ._memo import snapshot_memo
-
-    return snapshot_memo(
-        _UNIT_CACHE,
-        spark,
-        sf_dir,
-        lambda: _unit_vectors(spark, sf_dir).localCheckpoint(eager=True),
-    )
+    return _unit_vectors(spark, sf_dir).localCheckpoint(eager=True)
 
 
+@artifact("query_vec", parents={"unit_vectors"})
+def query_unit_cached(spark: SparkSession, sf_dir: str) -> list[float]:
+    """The normalized query vector (vec_id == QUERY_VEC_ID) memoized
+    per corpus snapshot (optimization r14): every single-query ANN key
+    (ann_ivf, ann_pq, ann_ivf_pq) re-ran the same 1-row filter+collect
+    job per call — a deterministic snapshot scalar exactly like the
+    stream pre-flight scalars memoized in r13. Values are the
+    checkpointed unit frame's own (JVM-normalized) doubles, so every
+    consumer sees bit-identical coordinates."""
+    return [
+        float(x)
+        for x in unit_vectors_cached(spark, sf_dir)
+        .filter(F.col("vec_id") == QUERY_VEC_ID)
+        .select("v")
+        .collect()[0]
+        .v
+    ]
+
+
+@artifact(
+    "ivf_model",
+    parents={"unit_vectors"},
+    extra=lambda: (N_CENTROIDS, _LLOYD_ITERS, _TRAIN_SAMPLE_TARGET),
+)
 def ivf_centroids_cached(spark: SparkSession, sf_dir: str) -> list[list[float]]:
     """``train_ivf_centroids`` over the memoized unit frame, itself
     memoized per (session, sf_dir, hyperparams): the coarse quantizer
@@ -124,15 +113,7 @@ def ivf_centroids_cached(spark: SparkSession, sf_dir: str) -> list[list[float]]:
     corpus snapshot instead of once per key. Deterministic input →
     identical centroids, so per-key results are unchanged. Snapshot-
     fingerprint keyed like ``unit_vectors_cached``."""
-    from ._memo import snapshot_memo
-
-    return snapshot_memo(
-        _CENTROID_CACHE,
-        spark,
-        sf_dir,
-        lambda: train_ivf_centroids(unit_vectors_cached(spark, sf_dir)),
-        extra=(N_CENTROIDS, _LLOYD_ITERS, _TRAIN_SAMPLE_TARGET),
-    )
+    return train_ivf_centroids(unit_vectors_cached(spark, sf_dir))
 
 
 # target per-cell population for BATCH (all-vs-all) consumers. Derived
@@ -146,6 +127,17 @@ def ivf_centroids_cached(spark: SparkSession, sf_dir: str) -> list[list[float]]:
 BATCH_CELL_TARGET = 125
 
 
+@artifact(
+    "batch_model",
+    parents={"unit_vectors", "ivf_model"},
+    extra=lambda: (
+        N_CENTROIDS,
+        BATCH_CELL_TARGET,
+        _LLOYD_ITERS,
+        _TRAIN_SAMPLE_TARGET,
+        _DRIVER_SAMPLE_CAP,
+    ),
+)
 def batch_centroids_cached(spark: SparkSession, sf_dir: str) -> list[list[float]]:
     """The BATCH-consumer quantizer: cells grown in proportion to the
     corpus (k = max(N_CENTROIDS, round(n / BATCH_CELL_TARGET))) so the
@@ -157,12 +149,10 @@ def batch_centroids_cached(spark: SparkSession, sf_dir: str) -> list[list[float]
     their recall). Delegates to the shared model when the sizes agree,
     so at every test/bench scale this IS the shared model — one
     training, bit-identical results."""
-    n_vec = unit_vectors_cached(spark, sf_dir).count()  # checkpointed: cheap
-    k = max(N_CENTROIDS, round(n_vec / BATCH_CELL_TARGET))
+    unit = unit_vectors_cached(spark, sf_dir)
+    k = max(N_CENTROIDS, round(unit.count() / BATCH_CELL_TARGET))
     if k == N_CENTROIDS:
         return ivf_centroids_cached(spark, sf_dir)
-    from ._memo import snapshot_memo
-
     # training sample grows with k (>=4 points/cell) but stays
     # driver-bounded at _DRIVER_SAMPLE_CAP x dim doubles (~25 MB);
     # past the cap training moves OFF the driver entirely:
@@ -172,25 +162,9 @@ def batch_centroids_cached(spark: SparkSession, sf_dir: str) -> list[list[float]
     # model (VERDICT r6 #2 — previously a documented handoff, now code;
     # equivalence pinned in tests/test_batch_quantizer.py)
     if 4 * k > _DRIVER_SAMPLE_CAP:
-        return snapshot_memo(
-            _CENTROID_CACHE,
-            spark,
-            sf_dir,
-            lambda: train_ivf_centroids_mllib(
-                unit_vectors_cached(spark, sf_dir), k=k
-            ),
-            extra=("mllib", k, _LLOYD_ITERS),
-        )
+        return train_ivf_centroids_mllib(unit, k=k)
     sample = min(_DRIVER_SAMPLE_CAP, max(_TRAIN_SAMPLE_TARGET, 4 * k))
-    return snapshot_memo(
-        _CENTROID_CACHE,
-        spark,
-        sf_dir,
-        lambda: train_ivf_centroids(
-            unit_vectors_cached(spark, sf_dir), k=k, sample_target=sample
-        ),
-        extra=(k, _LLOYD_ITERS, sample),
-    )
+    return train_ivf_centroids(unit, k=k, sample_target=sample)
 
 
 def _unit_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -349,8 +323,8 @@ _TRAIN_SAMPLE_TARGET = 2_000
 # scales top out at 60 k vectors, so exercising the distributed
 # trainer in a MEASURED run (not just the lowered-cap unit test)
 # requires forcing the handoff below its natural n ~ 1.56 M threshold.
-_DRIVER_SAMPLE_CAP = int(os.environ.get("SPARK_GRAFT_DRIVER_SAMPLE_CAP", 50_000))
-if "SPARK_GRAFT_DRIVER_SAMPLE_CAP" in os.environ:
+_DRIVER_SAMPLE_CAP = env_int("SPARK_GRAFT_DRIVER_SAMPLE_CAP", 50_000)
+if _DRIVER_SAMPLE_CAP != 50_000:
     # loud notice on override (ADVICE r8): the cap reroutes trainer
     # SELECTION (driver-Lloyd vs distributed MLlib), and a stale
     # export left over from a probe run would silently change which
@@ -776,51 +750,35 @@ def pq_adc_scores(codes: DataFrame, lut) -> DataFrame:
     return codes.select(*cols).mapInArrow(kernel, "vec_id bigint, adc double")
 
 
-_PQ_CODEBOOK_CACHE: dict = register_cache({})
-
-
+@artifact(
+    "pq_codebooks",
+    parents={"unit_vectors", "ivf_model"},
+    extra=lambda: (
+        _PQ_M, _PQ_K, _PQ_ITERS, _TRAIN_SAMPLE_TARGET, N_CENTROIDS, _LLOYD_ITERS
+    ),
+)
 def pq_codebooks_cached(
-    spark: SparkSession,
-    sf_dir: str,
-    unit: DataFrame,
-    dim: int,
-    variant: str,
-) -> dict[int, list[list[float]]]:
-    """``train_pq_codebooks`` memoized per (session, corpus snapshot,
-    variant): the codebook is index-build state exactly like the IVF
-    centroids — a deployment trains it once at ingest, not per query.
-    ``variant`` separates the plain-vector codebooks (ann_pq) from the
-    residual ones (ann_ivf_pq); training is deterministic, so cached
-    and fresh models are identical."""
-    from ._memo import snapshot_memo
-
-    return snapshot_memo(
-        _PQ_CODEBOOK_CACHE,
-        spark,
-        sf_dir,
-        lambda: train_pq_codebooks(unit, dim),
-        extra=(variant, _PQ_M, _PQ_K, _PQ_ITERS, _TRAIN_SAMPLE_TARGET),
-    )
-
-
-def warm_pq_codebooks(spark: SparkSession, sf_dir: str) -> None:
-    """Pre-train BOTH memoized PQ codebook variants against the current
-    corpus snapshot (ADVICE r6 #1): without this the plain codebooks
-    train inside ann_pq's first bench run and cache-hit in the second,
-    so the min-of-runs protocol reports neither the training cost in
-    the per-key timing nor in shared setup. The frames passed here are
-    value-identical to the ones ann_pq / ann_ivf_pq construct (same
-    normalize, same assign+residualize kernels), and training is
-    deterministic, so the warmed model is bit-identical to a per-key
-    build."""
+    spark: SparkSession, sf_dir: str
+) -> dict[str, dict[int, list[list[float]]]]:
+    """Both PQ codebook variants, memoized per (session, corpus
+    snapshot): ``"plain"`` over the unit vectors (ann_pq) and
+    ``"residual"`` over the assign+residualize residuals of the shared
+    IVF model (ann_ivf_pq). A codebook is index-build state exactly
+    like the IVF centroids — a deployment trains it once at ingest,
+    not per query (ADVICE r6 #1: trained inside a key, its cost
+    appeared in neither the per-key timing nor shared setup).
+    Training is deterministic, so cached and fresh models are
+    identical."""
     unit = unit_vectors_cached(spark, sf_dir)
     dim = len(unit.select("v").first()[0])
-    pq_codebooks_cached(spark, sf_dir, unit, dim, "plain")
     centroids = ivf_centroids_cached(spark, sf_dir)
     res = residualize(assign_cells(unit, centroids), centroids)
-    pq_codebooks_cached(
-        spark, sf_dir, res.select("vec_id", F.col("r").alias("v")), dim, "residual"
-    )
+    return {
+        "plain": train_pq_codebooks(unit, dim),
+        "residual": train_pq_codebooks(
+            res.select("vec_id", F.col("r").alias("v")), dim
+        ),
+    }
 
 
 def train_pq_codebooks(
@@ -892,13 +850,13 @@ def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim = len(qv)
     # the shared checkpointed unit frame (optimization r14): the inline
     # normalize this replaces was value-identical to _unit_vectors (the
-    # warmed codebooks already depend on that identity — see
-    # warm_pq_codebooks), but was re-planned from the parquet scan in
+    # memoized codebooks already depend on that identity — see
+    # pq_codebooks_cached), but was re-planned from the parquet scan in
     # BOTH the encode pass and the re-rank pass, costing two corpus
     # scans + two normalize evaluations per call that the rest of the
     # ANN family already shares through the memoized materialization
     unit = unit_vectors_cached(spark, sf_dir)
-    codebooks = pq_codebooks_cached(spark, sf_dir, unit, dim, "plain")
+    codebooks = pq_codebooks_cached(spark, sf_dir)["plain"]
     # encode the corpus: m packed 4-bit codes per vector (stored form)
     codes = pq_encode(unit, codebooks, dim)
 
@@ -997,16 +955,13 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = assign_cells(unit, centroids)
 
     # fine quantizer on residuals: codebooks train on the FULL corpus's
-    # residual distribution (index build time); only probed cells are
-    # encoded+scored at query time (at scale codes are precomputed at
-    # ingest and this is a pruned scan)
-    # three consumers (trainer count, trainer sample collect, probed
-    # encode) — materialize the assign+residualize kernels once
-    res = residualize(assigned, centroids).localCheckpoint(eager=True)
-    codebooks = pq_codebooks_cached(
-        spark, sf_dir, res.select("vec_id", F.col("r").alias("v")), dim, "residual"
+    # residual distribution (index build time, memoized); only probed
+    # cells are encoded+scored at query time (at scale codes are
+    # precomputed at ingest and this is a pruned scan)
+    codebooks = pq_codebooks_cached(spark, sf_dir)["residual"]
+    probed = residualize(assigned, centroids).filter(
+        F.col("cell").isin(probe_cells)
     )
-    probed = res.filter(F.col("cell").isin(probe_cells))
     codes = pq_encode(probed, codebooks, dim, vec_col="r", with_cell=True)
 
     d = dim // _PQ_M
@@ -1384,6 +1339,11 @@ def select_knn_probes(
 _KNN_PROBE_CACHE: dict = register_cache({})
 
 
+# memo=False: knn_probe_provenance memoizes the pre-flight selection
+# itself and reads its env overrides on every call
+@artifact(
+    "knn_probe", parents={"unit_vectors", "ivf_model", "batch_model"}, memo=False
+)
 def knn_probe_cached(spark: SparkSession, sf_dir: str) -> int:
     """The probe count ``ann_knn_join`` runs with — auto-selected by
     the recall pre-flight in the grown-k regime, the KNN_PROBE bench
@@ -1418,9 +1378,8 @@ def knn_probe_provenance(spark: SparkSession, sf_dir: str) -> dict:
     bench.py copies this dict into the artifact whenever the grown-k
     regime engaged, so a reader of a scale artifact sees which dial
     produced the ann_knn_join row without stderr archaeology."""
-    env = os.environ.get("SPARK_GRAFT_KNN_PROBE")
-    if env is not None:
-        p = int(env)
+    p = env_int("SPARK_GRAFT_KNN_PROBE", None)
+    if p is not None:
         print(
             f"[knn_probe] SPARK_GRAFT_KNN_PROBE override active: "
             f"n_probe forced to {p} (pre-flight bypassed)",
@@ -1430,8 +1389,6 @@ def knn_probe_provenance(spark: SparkSession, sf_dir: str) -> dict:
     centroids = batch_centroids_cached(spark, sf_dir)
     if len(centroids) <= N_CENTROIDS:
         return {"n_probe": KNN_PROBE, "mode": "fixed_k_default"}
-    from ._memo import snapshot_memo
-
     strict = os.environ.get(KNN_STRICT_ENV, "") not in ("", "0")
 
     def _build():
@@ -1746,8 +1703,7 @@ def _knn_exact_bill(spark: SparkSession, sf_dir: str) -> tuple[int, int, int]:
     the SPARK_GRAFT_KNN_EXACT_CAP override; budget 0 = unlimited). One
     count on the checkpointed unit frame — cheap enough that both the
     guard and the non-strict upgrade policy price it per call."""
-    env_cap = os.environ.get(KNN_EXACT_CAP_ENV)
-    budget = int(env_cap) if env_cap is not None else KNN_EXACT_PAIRS_BUDGET
+    budget = env_int(KNN_EXACT_CAP_ENV, KNN_EXACT_PAIRS_BUDGET)
     n = unit_vectors_cached(spark, sf_dir).count()
     return n, n * (n - 1), budget
 

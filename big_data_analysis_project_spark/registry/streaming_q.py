@@ -26,6 +26,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import env_int
 from ..sources.readers import (
     events_raw_ts_type,
     load_events,
@@ -68,12 +69,9 @@ def _stream_partitions(
 
     ``SPARK_GRAFT_STREAM_STATE_PARTITIONS`` overrides both regimes for
     cluster tuning."""
-    env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    if env:
-        try:
-            return max(1, int(env))
-        except ValueError:
-            pass  # a typo'd override falls back to the derived sizing
+    env = env_int("SPARK_GRAFT_STREAM_STATE_PARTITIONS", None)
+    if env is not None:
+        return max(1, env)
     cores = spark.sparkContext.defaultParallelism
     if kernel_parallel:
         return max(2, min(cores, 16))
@@ -816,10 +814,7 @@ def _stream_pairs_budget() -> int:
     overrides (0 = unlimited) for a deliberate replay measurement.
     One place (round-12 review) so the env parse cannot drift between
     the full-replay guard and the tail guard."""
-    import os
-
-    env_cap = os.environ.get("SPARK_GRAFT_STREAM_PAIRS_CAP")
-    return int(env_cap) if env_cap is not None else STREAM_PAIRS_BUDGET
+    return env_int("SPARK_GRAFT_STREAM_PAIRS_CAP", STREAM_PAIRS_BUDGET)
 
 
 def _stream_pairs_exceed(p: dict, budget: int) -> bool:

@@ -23,7 +23,7 @@ from pyspark.sql.window import Window
 from ..sources.readers import load_table
 
 from ._base import make_registry
-from ._memo import register_cache, snapshot_memo
+from ._memo import artifact
 
 QUERIES, ORACLE, q = make_registry()
 
@@ -473,11 +473,18 @@ def embed_gram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _fit_pca(spark: SparkSession, sf_dir: str):
-    """Driver-side eigendecomposition of the covariance derived from
-    the EXACT fixed-point gram + per-dimension sums (both integer
-    aggregates — deterministic regardless of partitioning). Model-sized
-    work: dim x dim eigh on ~2k collected integers."""
+@artifact("pca_model")
+def pca_model_cached(spark: SparkSession, sf_dir: str):
+    """The fitted (mu, comps, evals): driver-side eigendecomposition of
+    the covariance derived from the EXACT fixed-point gram +
+    per-dimension sums (both integer aggregates — deterministic
+    regardless of partitioning). Model-sized work: dim x dim eigh on
+    ~2k collected integers. Memoized per (session, snapshot) like the
+    IVF centroids and PQ codebooks (similarity_q), and pre-built in the
+    warm phase for the same reason: the fit's two corpus passes (gram
+    partials + per-dim sums) were re-paid on EVERY ``embed_pca`` call,
+    while a real deployment fits once per snapshot and projects many
+    times."""
     import numpy as np
 
     unit = _load_unit(spark, sf_dir)
@@ -509,20 +516,6 @@ def _fit_pca(spark: SparkSession, sf_dir: str):
         if comps[np.argmax(np.abs(comps[:, k])), k] < 0:
             comps[:, k] = -comps[:, k]
     return mu, comps, evals[order]
-
-
-_PCA_CACHE: dict = register_cache({})
-
-
-def pca_model_cached(spark: SparkSession, sf_dir: str):
-    """``_fit_pca`` memoized per (session, snapshot) — the fitted
-    (mu, comps, evals) is a model-sized corpus-snapshot artifact
-    exactly like the IVF centroids and PQ codebooks (similarity_q),
-    which are memoized and pre-built in the warm phase for the same
-    reason: the fit's two corpus passes (gram partials + per-dim sums)
-    were re-paid on EVERY ``embed_pca`` call, while a real deployment
-    fits once per snapshot and projects many times."""
-    return snapshot_memo(_PCA_CACHE, spark, sf_dir, lambda: _fit_pca(spark, sf_dir))
 
 
 @q("embed_pca", artifacts={"pca_model"})  # no SQL oracle for eigh; pytest

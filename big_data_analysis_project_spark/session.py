@@ -19,20 +19,35 @@ the initial value.
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "run_config", "stop_spark"]
+__all__ = ["env_int", "get_spark", "run_config", "stop_spark"]
+
+
+def env_int(name: str, default):
+    """The integer value of environment variable ``name``, or
+    ``default`` when it is unset, empty or not an integer. A malformed
+    value prints a one-line ``[env]`` warning on stderr instead of
+    raising: every integer ``SPARK_GRAFT_*`` knob is read through here,
+    some at import time, and a typo'd export must not take down the
+    import or the warm phase."""
+    raw = os.environ.get(name, "").strip()
+    if not raw:
+        return default
+    try:
+        return int(raw)
+    except ValueError:
+        print(
+            f"[env] {name}={raw!r} is not an integer; using the default {default}",
+            file=sys.stderr,
+        )
+        return default
 
 
 def _default_parallelism() -> int:
-    env = os.environ.get("SPARK_GRAFT_CPUS")
-    if env:
-        try:
-            return max(1, int(env))
-        except ValueError:
-            pass  # a typo'd env var falls back rather than killing every entry point
-    return os.cpu_count() or 4
+    return max(1, env_int("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
 
 def get_spark(

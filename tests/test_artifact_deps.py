@@ -23,25 +23,13 @@ REG_DIR = (
     / "registry"
 )
 
-# accessor function -> warmable artifact name (the names
-# warm_shared_artifacts builds)
-ACCESSORS = {
-    "shingles_cached": "shingles",
-    "shingle_evidence_cached": "shingle_evidence",
-    "capped_evidence_cached": "capped_evidence",
-    "minhash_pairs_cached": "minhash_pairs",
-    "simhash_pairs_cached": "simhash_pairs",
-    "mllib_model_cached": "mllib_model",
-    "ngram_pairs_cached": "ngram_pairs",
-    "unit_vectors_cached": "unit_vectors",
-    "query_unit_cached": "query_vec",
-    "ivf_centroids_cached": "ivf_model",
-    "pq_codebooks_cached": "pq_codebooks",
-    "batch_centroids_cached": "batch_model",
-    "knn_probe_cached": "knn_probe",
-    "pca_model_cached": "pca_model",
-    "synthetic_marts": "tb_marts",
-}
+
+def _accessors() -> dict[str, str]:
+    """accessor function name -> artifact name, read from the artifact
+    registry (the names warm_shared_artifacts builds)."""
+    from big_data_analysis_project_spark.registry import ARTIFACTS
+
+    return {a.accessor.__name__: name for name, a in ARTIFACTS.items()}
 
 
 def _closure(arts, parents):
@@ -61,6 +49,7 @@ def _derive_key_artifacts():
     following helper calls by name across registry modules (names are
     module-unique; an accessor call terminates recursion — its own
     deps are the parent closure's job)."""
+    accessors = _accessors()
     fn_calls: dict[str, set[str]] = {}
     key_fn: dict[str, str] = {}
     for mod in REG_DIR.glob("*.py"):
@@ -94,8 +83,8 @@ def _derive_key_artifacts():
         seen.add(fname)
         out: set[str] = set()
         for c in fn_calls.get(fname, ()):
-            if c in ACCESSORS:
-                out.add(ACCESSORS[c])
+            if c in accessors:
+                out.add(accessors[c])
             elif c in fn_calls and c != fname:
                 out |= reachable(c, seen)
         return out
@@ -128,22 +117,16 @@ def test_declared_artifacts_cover_actual_consumption():
     )
 
 
-def test_declared_artifacts_are_known_names():
-    """Over-declaration guard: a typo'd artifact name would silently
-    never match a --skip-warm set. Every declared name must be one
-    warm_shared_artifacts can build (= an ACCESSORS value)."""
-    from big_data_analysis_project_spark.registry import (
-        ARTIFACT_PARENTS,
-        KEY_ARTIFACTS,
-    )
+def test_artifact_rejects_undeclared_parent():
+    """A typo'd parent (or one declared after its child) fails the
+    declaration, so the registry order stays topological."""
+    import pytest
 
-    known = set(ACCESSORS.values())
-    for key, arts in KEY_ARTIFACTS.items():
-        unknown = set(arts) - known
-        assert not unknown, f"{key} declares unknown artifact(s) {unknown}"
-    for art, parents in ARTIFACT_PARENTS.items():
-        assert art in known, art
-        assert set(parents) <= known, (art, parents)
+    from big_data_analysis_project_spark.registry._memo import ARTIFACTS, artifact
+
+    with pytest.raises(AssertionError, match="not declared before it"):
+        artifact("typo_child", parents={"shingle"})
+    assert "typo_child" not in ARTIFACTS
 
 
 def test_closure_is_transitive():
@@ -158,14 +141,15 @@ def test_closure_is_transitive():
 
 def test_warm_scheduler_respects_parents_and_overlaps(spark, monkeypatch):
     """r13 optimization (guide §2.6): warm_shared_artifacts runs
-    independent builder chains concurrently but must never start a
-    child before its ARTIFACT_PARENTS finish — a child racing its
-    parent's memoized build would double-build the checkpoint. Fakes
-    with deliberate sleeps record (start, end) per builder; the
-    parallel run must (a) order every present (child, parent) edge and
-    (b) actually overlap (wall well under the serial sum)."""
+    independent builds concurrently but must never start a child
+    before its declared parents finish — a child racing its parent's
+    memoized build would double-build the checkpoint. Every registered
+    artifact's accessor is swapped for a fake with a deliberate sleep
+    that records (start, end); the parallel run must (a) order every
+    (child, parent) edge and (b) actually overlap (wall well under the
+    serial sum)."""
+    import dataclasses
     import time
-    import types
 
     import big_data_analysis_project_spark.registry as R
 
@@ -176,44 +160,19 @@ def test_warm_scheduler_respects_parents_and_overlaps(spark, monkeypatch):
             t0 = time.perf_counter()
             time.sleep(dt)
             spans[name] = (t0, time.perf_counter())
-            return types.SimpleNamespace(count=lambda: 0)
 
         return _f
 
-    monkeypatch.setattr(R.dedup_q, "shingles_cached", fake("shingles"))
-    monkeypatch.setattr(
-        R.dedup_q, "shingle_evidence_cached", fake("shingle_evidence")
-    )
-    monkeypatch.setattr(
-        R.dedup_q, "capped_evidence_cached", fake("capped_evidence")
-    )
-    monkeypatch.setattr(R.dedup_q, "minhash_pairs_cached", fake("minhash_pairs"))
-    monkeypatch.setattr(R.dedup_q, "simhash_pairs_cached", fake("simhash_pairs"))
-    monkeypatch.setattr(R.dedup_q, "warm_mllib_model", fake("mllib_model"))
-    monkeypatch.setattr(R.dedup_q, "ngram_pairs_cached", fake("ngram_pairs"))
-    monkeypatch.setattr(
-        R.similarity_q, "unit_vectors_cached", fake("unit_vectors")
-    )
-    monkeypatch.setattr(R.similarity_q, "ivf_centroids_cached", fake("ivf_model"))
-    monkeypatch.setattr(R.similarity_q, "query_unit_cached", fake("query_vec"))
-    monkeypatch.setattr(R.similarity_q, "warm_pq_codebooks", fake("pq_codebooks"))
-    monkeypatch.setattr(
-        R.similarity_q, "batch_centroids_cached", fake("batch_model")
-    )
-    monkeypatch.setattr(R.similarity_q, "knn_probe_cached", fake("knn_probe"))
-    monkeypatch.setattr(R.training_q, "pca_model_cached", fake("pca_model"))
-    monkeypatch.setattr(R.pipeline_q, "synthetic_marts", fake("tb_marts"))
+    for name, art in list(R.ARTIFACTS.items()):
+        monkeypatch.setitem(
+            R.ARTIFACTS, name, dataclasses.replace(art, accessor=fake(name))
+        )
 
     t0 = time.perf_counter()
     out = R.warm_shared_artifacts(spark, "/nonexistent", parallel=4)
     wall = time.perf_counter() - t0
 
-    assert set(spans) == set(out) == {
-        "shingles", "shingle_evidence", "capped_evidence", "minhash_pairs",
-        "simhash_pairs", "mllib_model", "ngram_pairs", "unit_vectors",
-        "ivf_model", "query_vec", "pq_codebooks", "batch_model",
-        "knn_probe", "pca_model", "tb_marts",
-    }
+    assert set(spans) == set(out) == set(R.ARTIFACTS)
     for child, parents in R.ARTIFACT_PARENTS.items():
         for parent in parents:
             assert spans[child][0] >= spans[parent][1], (
@@ -222,13 +181,11 @@ def test_warm_scheduler_respects_parents_and_overlaps(spark, monkeypatch):
     serial = sum(e - s for s, e in spans.values())
     assert wall < 0.8 * serial, (wall, serial)
 
-    # parallel=1 is the sequential attribution mode: declared order
+    # parallel=1 is the sequential attribution mode: every artifact
+    # builds after all of its parents
     spans.clear()
     R.warm_shared_artifacts(spark, "/nonexistent", parallel=1)
     starts = sorted(spans, key=lambda n: spans[n][0])
-    assert starts == [
-        "shingles", "shingle_evidence", "capped_evidence", "minhash_pairs",
-        "simhash_pairs", "mllib_model", "ngram_pairs", "unit_vectors",
-        "ivf_model", "query_vec", "pq_codebooks", "batch_model",
-        "knn_probe", "pca_model", "tb_marts",
-    ]
+    assert set(starts) == set(R.ARTIFACTS)
+    for i, name in enumerate(starts):
+        assert R.ARTIFACT_PARENTS[name] <= set(starts[:i]), name

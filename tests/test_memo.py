@@ -78,33 +78,37 @@ def test_release_snapshot_drops_only_that_corpus(spark, tmp_path):
 
 
 def test_registry_caches_are_registered():
-    """Every snapshot-keyed module-level memo dict must be swept by
-    release_snapshot — a cache added without register_cache would
-    silently reintroduce the cross-corpus pinning the probe fix
-    closed. The synthetic-marts cache is deliberately NOT snapshot
-    keyed (corpus-independent input) and is exempt."""
+    """Every snapshot-keyed memo dict must be swept by release_snapshot
+    — a cache added without register_cache would silently reintroduce
+    the cross-corpus pinning the probe fix closed. Covers the cache of
+    every memoized ``@artifact`` and the snapshot_memo dicts of the
+    facts that are not artifacts. The synthetic-marts cache is
+    deliberately NOT snapshot keyed (corpus-independent input) and is
+    exempt, as is knn_probe, whose selection memo is listed below."""
     from big_data_analysis_project_spark.registry import (
+        ARTIFACTS,
         dedup_q,
         similarity_q,
         streaming_q,
     )
 
+    caches = {
+        name: a.accessor.cache
+        for name, a in ARTIFACTS.items()
+        if name not in ("tb_marts", "knn_probe")
+    }
     for mod, name in [
-        (dedup_q, "_SHINGLES_CACHE"),
-        (dedup_q, "_EVIDENCE_CACHE"),
         (dedup_q, "_DF_PROFILE_CACHE"),
-        (dedup_q, "_MINHASH_CACHE"),
-        (dedup_q, "_PAIRS_CACHE"),
         (dedup_q, "_INC_PROFILE_CACHE"),
-        (similarity_q, "_UNIT_CACHE"),
-        (similarity_q, "_CENTROID_CACHE"),
-        (similarity_q, "_PQ_CODEBOOK_CACHE"),
         (similarity_q, "_KNN_PROBE_CACHE"),
         (streaming_q, "_STREAM_PAIR_PROFILE_CACHE"),
+        (streaming_q, "_BACKFILL_PREFLIGHT_CACHE"),
     ]:
+        caches[f"{mod.__name__}.{name}"] = getattr(mod, name)
+    for name, cache in caches.items():
         assert any(
-            getattr(mod, name) is c for c in _REGISTERED_CACHES
-        ), f"{mod.__name__}.{name} is not registered for release_snapshot"
+            cache is c for c in _REGISTERED_CACHES
+        ), f"{name} is not registered for release_snapshot"
 
 
 def test_snapshot_fingerprint_missing_dir():
@@ -376,17 +380,19 @@ def test_mllib_model_memoized_per_snapshot(spark):
 
 
 def test_warm_mllib_model_refuses_where_the_key_would(spark, monkeypatch):
-    """The warm builder prices the corpus with the key's own guard so a
-    guarded corpus never pays even the linear TF build."""
+    """The model build prices the corpus with the key's own guard so a
+    guarded corpus never pays even the linear TF build. Calls the
+    unmemoized build: a model memoized by an earlier test would
+    otherwise be served without building."""
     import pytest as _pytest
 
     from big_data_analysis_project_spark.registry._base import ScaleRefusal
     from big_data_analysis_project_spark.registry.dedup_q import (
-        warm_mllib_model,
+        mllib_model_cached,
     )
 
     from .conftest import SF_SMOKE
 
     monkeypatch.setenv("SPARK_GRAFT_MLLIB_PAIRS_CAP", "1")
     with _pytest.raises(ScaleRefusal):
-        warm_mllib_model(spark, SF_SMOKE)
+        mllib_model_cached.__wrapped__(spark, SF_SMOKE)

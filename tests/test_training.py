@@ -113,7 +113,7 @@ def test_embed_pca_matches_numpy(spark):
     )
     n, dim = x.shape
 
-    # local replica of the fixed-point fit (same math as _fit_pca)
+    # local replica of the fixed-point fit (same math as pca_model_cached)
     g = np.zeros((dim, dim))
     for row in x:
         g += np.floor(np.outer(row, row) * GRAM_SCALE)
