@@ -1634,7 +1634,7 @@ def sink_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     high-cardinality ones). File-range disjointness is footer-verified
     in tests/test_boundaries.py."""
 
-    out = str(Path(tempfile.mkdtemp(prefix="bdap_sink_sorted_")) / "orders_sorted")
+    out = str(Path(tempfile.mkdtemp(prefix="sink_sorted_", dir=_SINK_ROOT)) / "orders_sorted")
     (
         load_table(spark, sf_dir, "orders")
         .select("o_orderkey", "o_custkey", F.round("o_totalprice", 2).alias("price"))
@@ -1778,7 +1778,7 @@ def sink_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         bit_s = F.shiftright(sx, i).bitwiseAND(F.lit(1))
         morton = morton + F.shiftleft(bit_p, 2 * i) + F.shiftleft(bit_s, 2 * i + 1)
 
-    out = str(Path(tempfile.mkdtemp(prefix="bdap_sink_zorder_")) / "lineitem_z")
+    out = str(Path(tempfile.mkdtemp(prefix="sink_zorder_", dir=_SINK_ROOT)) / "lineitem_z")
     (
         li.withColumn("_z", morton)
         .repartitionByRange(8, "_z")

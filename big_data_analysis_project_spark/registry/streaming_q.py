@@ -5,23 +5,57 @@ The reference has no streaming (batch + a 30-day scheduler loop,
 stream-shaped events table implies. The family pattern: every
 streaming shape ships as a PAIR — an oracle-checked batch twin
 (tumbling/sliding/session windows, enrichment join, interval join)
-plus the same body as a REAL Structured Streaming query (readStream +
-watermark + availableNow + memory/foreachBatch sink), equivalence-
+plus the same body as a REAL Structured Streaming query, equivalence-
 tested row-for-row against the twin in tests/test_recall.py because
 streaming semantics aren't DuckDB-expressible. Stateful coverage:
 windowed aggs, native session_window (batch + streaming),
 applyInPandasWithState custom sessionization, dropDuplicates dedup,
 stream-static broadcast enrichment, watermarked stream-stream
-interval join, a foreachBatch versioned-snapshot mart sink, and a
-checkpoint-sharing incremental re-run over newly-arrived files
-(stream_incremental — the §2.10 scheduler contract).
+interval joins (inner, left outer, backfill tail), a foreachBatch
+versioned-snapshot mart sink, and a checkpoint-sharing incremental
+re-run over newly-arrived files (stream_incremental — the §2.10
+scheduler contract).
+
+Every file-backed stream key is a transform handed to ``run_stream``,
+which owns the rest of the drain:
+
+* staging — ``source`` is a table name, whose part files are
+  symlinked flat into a per-call stage (events read through the one
+  raw schema and ``normalize_events_ts``), or a list of batch frames,
+  each written as one file with an ascending mtime and replayed one
+  file per micro-batch;
+* reading — ``query(read)`` gets a ``read()`` that returns a fresh
+  streaming frame over the one stage, so both sides of a stream-stream
+  join read one staged copy;
+* sink and drain — a memory sink named ``name``, returned as
+  ``spark.table(name)``, or a ``sink`` callable run as
+  ``foreachBatch``; an availableNow trigger and a shuffle-partition
+  count from ``_stream_partitions`` (both set in ``_start``);
+* cleanup — the stage is deleted once the drain ends. Only outputs
+  read lazily after the call (the foreachBatch mart, the incremental
+  mart) keep an exit-time cleanup.
+
+Drains run in the caller's session, not in ``spark.newSession()``: a
+new session's memory-sink view raises AnalysisException from the
+caller's ``spark.table``, the caller's StreamingQueryListener sees
+none of its progress events, and it does not inherit a runtime-set
+session time zone. So the one session-conf write is narrowed instead:
+``_start`` sets ``spark.sql.shuffle.partitions`` only around
+``writer.start()``, which captures it for the query's lifetime.
+
+``stream_python_source`` keeps its own poll-to-count loop: its source
+never ends, so it cannot drain under availableNow.
 """
 
 from __future__ import annotations
 
 import atexit
+import json
 import os
 import shutil
+import tempfile
+from functools import reduce
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -75,8 +109,6 @@ def _stream_partitions(
     cores = spark.sparkContext.defaultParallelism
     if kernel_parallel:
         return max(2, min(cores, 16))
-    from pathlib import Path
-
     nbytes = 0
     try:
         p = Path(sf_dir) / f"{table}.parquet"
@@ -91,50 +123,65 @@ def _stream_partitions(
     return max(2, min(cores, -(-nbytes // _STATE_PARTITION_TARGET_BYTES)))
 
 
-def _drain(spark: SparkSession, writer, parts: int) -> None:
-    """Start + drain a streaming query with ``parts`` shuffle
-    partitions (see ``_stream_partitions`` for how callers size it).
-    Every stateful streaming op instantiates ONE state store per
-    shuffle partition, each paying per-batch delta-file and
-    maintenance cost — so state partitions are sized to state VOLUME,
-    not cluster cores (32 stores for a few MB of state measured 3x
-    slower than 8, and 8 measured ~1.4-2x slower than 2, on the sf0.1
-    suite). The conf only affects queries STARTED under it; restored
-    after the drain so batch keys keep the session default."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+def _start(spark: SparkSession, writer, parts: int):
+    """Start ``writer`` as an availableNow drain with ``parts`` shuffle
+    partitions and wait for it to end; returns the terminated query.
+    Every stateful operator keeps one state store per shuffle
+    partition, so the count is sized to the data (see
+    ``_stream_partitions``), not taken from the session default. A
+    query captures the conf when it starts, so the caller's value is
+    restored right after ``start()``: batch work planned while the
+    stream drains never sees the stream's count, and a session that
+    never set it is left without it."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, str(parts))
     try:
-        writer.start().awaitTermination()
+        query = writer.trigger(availableNow=True).start()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+    query.awaitTermination()
+    return query
 
+
+# the file-source schema of each non-events table a stream stages
+_TABLE_SCHEMAS = {
+    "documents": "doc_id bigint, text string, lang string, source string, n_chars bigint",
+}
+
+
+def _events_schema(spark: SparkSession, sf_dir: str) -> str:
+    """The raw on-disk events schema a file stream must be given: ``ts``
+    reads as bigint nanos or as timestamp[us] depending on the corpus
+    generation, and ``normalize_events_ts`` turns either into a
+    session-tz timestamp."""
+    ts_t = events_raw_ts_type(spark, sf_dir)
+    return (
+        f"event_id bigint, ts {ts_t}, user_id bigint, "
+        "event_type string, value double, props string"
+    )
 
 
 def _stage_table_files(stage, sf_dir: str, table: str) -> None:
     """Symlink a parquet table's data file(s) flat into a staging dir.
-    A real parquet TABLE is a directory of part files, and
-    FileStreamSource does not recurse into subdirectories — a directory
-    symlink silently matches ZERO files (round-6 scale probe: every
-    events-driven stream key returned 0 rows on a multi-file table).
-    Flat part links are also the honest layout: a production arrival
-    directory receives files, not table directories."""
-    import os
-    from pathlib import Path
-
+    A parquet TABLE is a directory of part files, and FileStreamSource
+    does not recurse into subdirectories — a directory symlink would
+    silently match ZERO files. Flat part links are also the honest
+    layout: a production arrival directory receives files, not table
+    directories."""
     # resolve() before linking: a RELATIVE sf_dir would otherwise be
     # stored verbatim as the link target and re-resolved against the
-    # staging dir in /tmp — every link silently broken, stream reads
-    # zero rows (round-7 probe: all stream keys 0 rows when invoked
-    # with a repo-relative data dir). Same silent-zero class as the
-    # round-6 directory-symlink bug; absolute targets kill it.
+    # staging dir, leaving every link dangling and the stream empty
     src = (Path(sf_dir) / f"{table}.parquet").resolve()
     if src.is_dir():
         # rglob, not glob: a PARTITIONED table nests part files under
         # key=value subdirectories, where a top-level *.parquet glob
-        # matches nothing — the same silent 0-row failure class this
-        # helper exists to prevent (ADVICE r6 #4). Note flat links drop
-        # directory-encoded partition VALUES; callers stage plain
-        # tables, and the raise below makes any empty staging loud.
+        # matches nothing. Flat links drop directory-encoded partition
+        # VALUES; callers stage plain tables, and the raise below makes
+        # any empty staging loud.
         parts = sorted(p for p in src.rglob("*.parquet") if p.is_file())
         if not parts:
             raise ValueError(
@@ -146,31 +193,119 @@ def _stage_table_files(stage, sf_dir: str, table: str) -> None:
     else:
         os.symlink(src, Path(stage) / f"{table}.parquet")
 
-def _events_ts_bounds_us(sf_dir: str) -> tuple[int, int] | None:
-    """Exact (min, max) of ``events.ts`` in unix MICROSECONDS read from
-    the parquet FOOTER statistics — a pure-metadata pass over row-group
-    headers, no data read (optimization r14, guide §6: the same
-    table-statistics discipline ``sink_zorder``'s ``_parquet_int_bounds``
-    established). The MIN/MAX aggregation this replaces is a FULL corpus
-    scan at 100 TB, run once per call by the quartile/split staging
-    keys. INT64 timestamp statistics are exact (no truncation), so the
-    bounds equal ``unix_micros(min/max(ts))`` over the normalized frame
-    for both on-disk encodings:
 
-    * ``timestamp[us]``: the physical INT64 IS unix micros (session tz
-      pinned UTC, so the NTZ reading is value-identical);
+def _stage_batches(stage: Path, frames: list[DataFrame]):
+    """Write each frame as ONE parquet file in ``stage``, with mtimes
+    ascending in list order so a ``maxFilesPerTrigger=1`` file source
+    replays them as one micro-batch each, in order. One partitioned
+    write produces every file; an empty frame writes no file. Returns
+    the files' schema.
+
+    The hash repartition on the batch tag sends all of a frame's rows
+    to one writer task while the scans and filters above it stay
+    parallel — coalesce(1) would propagate up the narrow chain and
+    serialize the whole source scan into one task."""
+    tmp = stage / "_w"
+    tagged = [f.withColumn("_batch", F.lit(i)) for i, f in enumerate(frames)]
+    (
+        reduce(DataFrame.unionByName, tagged)
+        .repartition(len(frames), "_batch")
+        .write.partitionBy("_batch")
+        .parquet(str(tmp))
+    )
+    for i in range(len(frames)):
+        bdir = tmp / f"_batch={i}"
+        if not bdir.exists():
+            continue
+        dst = stage / f"batch_{i}.parquet"
+        shutil.move(str(next(bdir.glob("part-*.parquet"))), dst)
+        os.utime(dst, (1_000_000_000 + i * 1000,) * 2)
+    shutil.rmtree(tmp)
+    return frames[0].schema
+
+
+def run_stream(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    query,
+    *,
+    source="events",
+    mode: str = "append",
+    sink=None,
+    kernel_parallel: bool = False,
+) -> DataFrame | None:
+    """Stage ``source``, run ``query(read)`` over it as a streaming
+    query named ``name``, drain it with availableNow, and delete the
+    stage. ``source`` is a table name of ``sf_dir`` (``events`` or
+    ``documents``) or a list of batch frames (see ``_stage_batches``);
+    ``read()`` returns a fresh streaming frame over the stage on every
+    call. Without ``sink`` the output goes to a memory sink and comes
+    back as ``spark.table(name)``; with one, ``sink(batch_df,
+    batch_id)`` runs as ``foreachBatch`` and nothing is returned."""
+    stage = Path(tempfile.mkdtemp(prefix=f"{name}_"))
+    try:
+        if isinstance(source, str):
+            _stage_table_files(stage, sf_dir, source)
+            table = source
+            if source == "events":
+                schema = _events_schema(spark, sf_dir)
+            else:
+                schema = _TABLE_SCHEMAS[source]
+
+            def read() -> DataFrame:
+                df = spark.readStream.schema(schema).format("parquet").load(str(stage))
+                return normalize_events_ts(df) if table == "events" else df
+        else:
+            table = "events"
+            schema = _stage_batches(stage, source)
+
+            def read() -> DataFrame:
+                return (
+                    spark.readStream.schema(schema)
+                    .option("maxFilesPerTrigger", 1)
+                    .format("parquet")
+                    .load(str(stage))
+                )
+
+        writer = query(read).writeStream.outputMode(mode).queryName(name)
+        writer = writer.format("memory") if sink is None else writer.foreachBatch(sink)
+        _start(
+            spark, writer,
+            _stream_partitions(spark, sf_dir, table, kernel_parallel=kernel_parallel),
+        )
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
+    return spark.table(name) if sink is None else None
+
+
+# session time zones under which a local (isAdjustedToUTC=false)
+# timestamp reads back as its raw value
+_UTC_ZONES = ("UTC", "Etc/UTC", "GMT", "Z", "+00:00")
+
+
+def _events_ts_bounds_us(sf_dir: str, tz: str = "UTC") -> tuple[int, int] | None:
+    """Exact (min, max) of ``unix_micros(ts)`` over the normalized
+    events, as a session in time zone ``tz`` reads them, from the
+    parquet FOOTER statistics — a pure-metadata pass over row-group
+    headers, no data read (the same table-statistics discipline
+    ``sink_zorder``'s ``_parquet_int_bounds`` follows). INT64 timestamp
+    statistics are exact (no truncation):
+
+    * ``timestamp[us]``: a UTC-adjusted column's physical INT64 IS unix
+      micros. A local (NTZ) column is read as wall-clock time in the
+      session zone, so its raw value is the answer only under UTC;
+      under any other zone this returns None;
     * ``TIMESTAMP(NANOS)`` (read as bigint): physical nanos
       floor-divide to micros exactly like ``normalize_events_ts``'s
       ``ts div 1000`` (values are post-1970 — guarded below — so
-      floor == Spark's truncating ``div``).
+      floor == Spark's truncating ``div``), in any zone.
 
     Returns None — caller falls back to the aggregation — when any
     row group lacks stats, the unit is unrecognized, a value is
-    pre-epoch, or the footer is unreadable. min/max statistics ignore
-    nulls, exactly as the MIN/MAX aggregation does."""
-    import json
-    from pathlib import Path
-
+    pre-epoch, the zone would shift the values, or the footer is
+    unreadable. min/max statistics ignore nulls, exactly as the
+    MIN/MAX aggregation does."""
     import pyarrow.parquet as pq
 
     src = Path(sf_dir) / "events.parquet"
@@ -211,6 +346,8 @@ def _events_ts_bounds_us(sf_dir: str) -> tuple[int, int] | None:
                     a, b = a // 1000, b // 1000
                 elif unit != "microseconds":
                     return None
+                elif not meta.get("isAdjustedToUTC") and tz not in _UTC_ZONES:
+                    return None
                 lo = a if lo is None else min(lo, a)
                 hi = b if hi is None else max(hi, b)
     except Exception:  # noqa: BLE001 — stats are an optimization, never fatal
@@ -220,36 +357,43 @@ def _events_ts_bounds_us(sf_dir: str) -> tuple[int, int] | None:
     return lo, hi
 
 
-def _stage_events_stream(spark: SparkSession, sf_dir: str, prefix: str) -> DataFrame:
-    """Shared file-source staging for the events-driven streaming
-    keys: probe the on-disk ts encoding (nanos-as-long vs
-    timestamp[us] across testdata generations), expose the single
-    events file through a per-process symlinked staging dir
-    (FileStreamSource needs a directory; at scale this IS the arrival
-    dir, per-process so concurrent harnesses don't race), and
-    normalize ts like load_events. Returns the full normalized
-    streaming frame — callers select what they need."""
-    import os
-    import tempfile
-    from pathlib import Path
+def _ts_bounds(spark: SparkSession, sf_dir: str, ev: DataFrame) -> tuple:
+    """(min, max) of ``unix_micros(ts)`` over the normalized events
+    frame ``ev``: from the footer when it gives them exactly in this
+    session's time zone, else one MIN/MAX aggregation (None, None on an
+    empty table). At 100 TB the aggregation is a full corpus scan."""
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    bounds = _events_ts_bounds_us(sf_dir, tz)
+    if bounds is None:
+        row = ev.select(
+            F.unix_micros(F.min("ts")), F.unix_micros(F.max("ts"))
+        ).collect()[0]
+        bounds = (row[0], row[1])
+    return bounds
 
-    import atexit
-    import shutil
 
-    ts_t = events_raw_ts_type(spark, sf_dir)
-    raw_schema = (
-        f"event_id bigint, ts {ts_t}, user_id bigint, "
-        "event_type string, value double, props string"
+def _hourly(ev: DataFrame, cents: bool = False) -> DataFrame:
+    """The hourly tumbling aggregate per event type, shared by
+    ``window_tumbling``, its streaming twins and the incremental mart.
+    Spark's window() is epoch-aligned, matching the oracle's
+    floor(epoch/3600). ``cents`` sums exact integer cents (FLOOR x100)
+    instead of rounding a double sum: an incremental state merge
+    changes the double accumulation order, so a raw double sum could
+    round apart from a one-shot oracle at .005 boundaries."""
+    if cents:
+        total = F.sum(F.floor(F.col("value") * 100)).cast("double") / 100
+    else:
+        total = F.round(F.sum("value"), 2)
+    return (
+        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n_events"), total.alias("total_value"))
+        .select(
+            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
+            "event_type",
+            "n_events",
+            "total_value",
+        )
     )
-    stage = Path(tempfile.mkdtemp(prefix=prefix))
-    # the dir is only needed while the query drains; reclaim it when
-    # the process exits so repeated bench/test cycles don't litter /tmp
-    atexit.register(shutil.rmtree, stage, ignore_errors=True)
-    _stage_table_files(stage, sf_dir, "events")
-    return normalize_events_ts(
-        spark.readStream.schema(raw_schema).format("parquet").load(str(stage))
-    )
-
 
 
 @q(
@@ -262,22 +406,8 @@ def _stage_events_stream(spark: SparkSession, sf_dir: str, prefix: str) -> DataF
        GROUP BY 1, 2""",
 )
 def window_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hourly tumbling window aggregate (batch form). Spark's
-    window() is epoch-aligned, matching the oracle's floor(epoch/3600)."""
-    ev = load_events(spark, sf_dir)
-    return (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
+    """Hourly tumbling window aggregate (batch form)."""
+    return _hourly(load_events(spark, sf_dir))
 
 
 @q("stream_hourly")  # rows-only: true streaming, not SQL-expressible
@@ -296,30 +426,11 @@ def stream_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline that removes the class entirely is demonstrated by
     ``stream_incremental``'s floor-cents surface — a production
     pipeline needing bit-equal twins should adopt it."""
-    stream = _stage_events_stream(spark, sf_dir, "bdap_stream_src_")
-    agg = (
-        stream.withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
+    return run_stream(
+        spark, sf_dir, "bdap_stream_hourly",
+        lambda read: _hourly(read().withWatermark("ts", "2 hours")),
+        mode="complete",
     )
-    _drain(
-        spark,
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("bdap_stream_hourly")
-        .trigger(availableNow=True),
-        _stream_partitions(spark, sf_dir),
-    )
-    return spark.table("bdap_stream_hourly")
 
 
 SESSION_GAP_MIN = 360  # 6 h — ~2 events/user/day in the testdata
@@ -403,8 +514,6 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    stream = _stage_events_stream(spark, sf_dir, "bdap_stream_sess_").select("user_id", "event_id", "ts", "value")
-
     gap_us = SESSION_GAP_MIN * 60 * 1_000_000
 
     def sessionize_user(key, pdfs, state: GroupState):
@@ -472,23 +581,25 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
             ]
         )
 
-    result = stream.groupBy("user_id").applyInPandasWithState(
-        sessionize_user,
-        outputStructType="user_id bigint, session_start string, n_events bigint, total_value double",
-        stateStructType="last_ts bigint, start bigint, n bigint, total double",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    _drain(
-        spark,
-        result.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("bdap_stream_sessionize")
-        .trigger(availableNow=True),
-        _stream_partitions(spark, sf_dir, kernel_parallel=True),
+    def sessions(read) -> DataFrame:
+        return (
+            read()
+            .select("user_id", "event_id", "ts", "value")
+            .groupBy("user_id")
+            .applyInPandasWithState(
+                sessionize_user,
+                outputStructType="user_id bigint, session_start string, n_events bigint, total_value double",
+                stateStructType="last_ts bigint, start bigint, n bigint, total double",
+                outputMode="update",
+                timeoutConf=GroupStateTimeout.NoTimeout,
+            )
+        )
+
+    tbl = run_stream(
+        spark, sf_dir, "bdap_stream_sessionize", sessions,
+        mode="update", kernel_parallel=True,
     )
     # update-mode memory sink: latest emission per (user, session_start)
-    tbl = spark.table("bdap_stream_sessionize")
     wlast = Window.partitionBy("user_id", "session_start").orderBy(
         F.desc("n_events")
     )
@@ -511,30 +622,13 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     at real scale the source swaps to files-on-arrival/kafka and
     ``withWatermark`` + ``dropDuplicatesWithinWatermark`` bounds the
     state window."""
-    import os
-    import tempfile
-    from pathlib import Path
-
-    doc_schema = "doc_id bigint, text string, lang string, source string, n_chars bigint"
-    stage = Path(tempfile.mkdtemp(prefix="bdap_stream_dedup_"))
-    atexit.register(shutil.rmtree, stage, ignore_errors=True)
-    _stage_table_files(stage, sf_dir, "documents")
-    stream = (
-        spark.readStream.schema(doc_schema)
-        .format("parquet")
-        .load(str(stage))
+    return run_stream(
+        spark, sf_dir, "bdap_stream_dedup",
+        lambda read: read()
         .select(F.md5(F.encode(F.col("text"), "UTF-8")).alias("h"))
-        .dropDuplicates(["h"])
+        .dropDuplicates(["h"]),
+        source="documents",
     )
-    _drain(
-        spark,
-        stream.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("bdap_stream_dedup")
-        .trigger(availableNow=True),
-        _stream_partitions(spark, sf_dir, table="documents"),
-    )
-    return spark.table("bdap_stream_dedup")
 
 
 @q("stream_sliding")  # rows-only: true streaming twin of window_sliding
@@ -544,26 +638,18 @@ def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``window_sliding`` batch key (equality asserted in
     tests/test_recall.py). Same watermark + groupBy(window) body; only
     the source/sink wiring differs from batch."""
-
-    stream = _stage_events_stream(spark, sf_dir, "bdap_stream_slide_")
-    agg = (
-        stream.withWatermark("ts", "2 hours")
+    return run_stream(
+        spark, sf_dir, "bdap_stream_sliding",
+        lambda read: read()
+        .withWatermark("ts", "2 hours")
         .groupBy(F.window("ts", "60 minutes", "30 minutes").alias("w"))
         .agg(F.count(F.lit(1)).alias("n"))
         .select(
             F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
             "n",
-        )
+        ),
+        mode="complete",
     )
-    _drain(
-        spark,
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("bdap_stream_sliding")
-        .trigger(availableNow=True),
-        _stream_partitions(spark, sf_dir),
-    )
-    return spark.table("bdap_stream_sliding")
 
 
 @q(
@@ -604,35 +690,44 @@ def stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim is re-broadcast per micro-batch, so slowly-changing dims are
     picked up between batches). Equivalence-tested row-for-row against
     events_enrich (tests/test_recall.py)."""
-
-    stream = _stage_events_stream(spark, sf_dir, "bdap_stream_enrich_")
     cust = load_table(spark, sf_dir, "customer")
     nat = load_table(spark, sf_dir, "nation")
     dim = (
         cust.join(F.broadcast(nat), cust.c_nationkey == nat.n_nationkey)
         .select("c_custkey", "c_mktsegment", "n_name")
     )
-    enriched = (
-        stream.join(F.broadcast(dim), stream.user_id == dim.c_custkey)
-        .select(
+
+    def enrich(read) -> DataFrame:
+        stream = read()
+        return stream.join(
+            F.broadcast(dim), stream.user_id == dim.c_custkey
+        ).select(
             "event_id",
             "event_type",
             F.col("c_mktsegment").alias("segment"),
             F.col("n_name").alias("nation_name"),
         )
-    )
-    _drain(
-        spark,
-        enriched.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("bdap_stream_enrich")
-        .trigger(availableNow=True),
-        _stream_partitions(spark, sf_dir),
-    )
-    return spark.table("bdap_stream_enrich")
+
+    return run_stream(spark, sf_dir, "bdap_stream_enrich", enrich)
 
 
 _ATTR_WINDOW_US = 3_600_000_000  # the 1-hour attribution window
+
+
+def _clicks(ev: DataFrame) -> DataFrame:
+    return ev.filter(F.col("event_type") == "click").select(
+        F.col("event_id").alias("click_id"),
+        "user_id",
+        F.col("ts").alias("c_ts"),
+    )
+
+
+def _purchases(ev: DataFrame) -> DataFrame:
+    return ev.filter(F.col("event_type") == "purchase").select(
+        F.col("event_id").alias("purchase_id"),
+        F.col("user_id").alias("p_user"),
+        F.col("ts").alias("p_ts"),
+    )
 
 
 def _attribution_sides(spark: SparkSession, sf_dir: str):
@@ -651,39 +746,29 @@ def _attribution_sides(spark: SparkSession, sf_dir: str):
     purchase's two exploded bins are distinct), so no dedup pass.
     Same rows, same oracle; only the candidate space changed."""
     ev = load_events(spark, sf_dir)
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            "user_id",
-            F.col("ts").alias("c_ts"),
-        )
-        .withColumn("bin", F.expr(f"unix_micros(c_ts) div {_ATTR_WINDOW_US}"))
+    clicks = _clicks(ev).withColumn(
+        "bin", F.expr(f"unix_micros(c_ts) div {_ATTR_WINDOW_US}")
     )
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withColumn(
-            "p_bin",
-            F.explode(
-                F.array(
-                    F.expr(f"unix_micros(p_ts) div {_ATTR_WINDOW_US} - 1"),
-                    F.expr(f"unix_micros(p_ts) div {_ATTR_WINDOW_US}"),
-                )
-            ),
-        )
+    purchases = _purchases(ev).withColumn(
+        "p_bin",
+        F.explode(
+            F.array(
+                F.expr(f"unix_micros(p_ts) div {_ATTR_WINDOW_US} - 1"),
+                F.expr(f"unix_micros(p_ts) div {_ATTR_WINDOW_US}"),
+            )
+        ),
     )
     return clicks, purchases
 
 
-def _attribution_join(clicks: DataFrame, purchases: DataFrame, how: str) -> DataFrame:
+def _attribution_join(
+    clicks: DataFrame, purchases: DataFrame, how: str, binned: bool = True
+) -> DataFrame:
+    cond = F.col("user_id") == F.col("p_user")
+    if binned:
+        cond = cond & (F.col("bin") == F.col("p_bin"))
     cond = (
-        (F.col("user_id") == F.col("p_user"))
-        & (F.col("bin") == F.col("p_bin"))
+        cond
         & (F.col("p_ts") >= F.col("c_ts"))
         & (F.col("p_ts") <= F.col("c_ts") + F.expr("interval 1 hour"))
     )
@@ -693,6 +778,16 @@ def _attribution_join(clicks: DataFrame, purchases: DataFrame, how: str) -> Data
         "user_id",
         (F.unix_micros("p_ts") - F.unix_micros("c_ts")).alias("gap_us"),
     )
+
+
+def _stream_attribution(read, how: str = "inner", delay: str = "2 hours") -> DataFrame:
+    """The attribution interval join between two streaming reads of
+    one stage, each side watermarked by ``delay``: the watermark and
+    the range condition bound join state to about (1 h window + delay)
+    of events per side, however long the stream runs."""
+    clicks = _clicks(read()).withWatermark("c_ts", delay)
+    purchases = _purchases(read()).withWatermark("p_ts", delay)
+    return _attribution_join(clicks, purchases, how, binned=False)
 
 
 _ATTRIBUTION_ORACLE = """
@@ -765,8 +860,12 @@ def stream_pair_profile(ev: DataFrame) -> dict:
     share. Same bigint + float64-shadow + exact-max discipline as
     ``incremental_probe_profile`` (dedup_q); one shuffle on user_id,
     linear in the events table."""
+    return _pair_audit(ev).collect()[0].asDict()
+
+
+def _pair_audit(ev: DataFrame) -> DataFrame:
     term = F.col("nc") * F.col("np")
-    row = (
+    return (
         ev.groupBy("user_id")
         .agg(
             F.sum((F.col("event_type") == "click").cast("bigint")).alias("nc"),
@@ -781,9 +880,7 @@ def stream_pair_profile(ev: DataFrame) -> dict:
                 F.sum(term.cast("double")), F.lit(0.0)
             ).alias("pairs_bound_dbl"),
         )
-        .collect()[0]
     )
-    return row.asDict()
 
 
 _STREAM_PAIR_PROFILE_CACHE: dict = register_cache({})
@@ -869,21 +966,7 @@ def stream_pair_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle_df_audit / graph_wedge_audit / incremental_probe_audit):
     joint-user count, hottest user's click x purchase product, and the
     total pairs_bound the state scan would evaluate."""
-    ev = load_events(spark, sf_dir)
-    term = F.col("nc") * F.col("np")
-    return (
-        ev.groupBy("user_id")
-        .agg(
-            F.sum((F.col("event_type") == "click").cast("bigint")).alias("nc"),
-            F.sum((F.col("event_type") == "purchase").cast("bigint")).alias("np"),
-        )
-        .filter((F.col("nc") > 0) & (F.col("np") > 0))
-        .agg(
-            F.count(F.lit(1)).alias("n_joint_users"),
-            F.coalesce(F.max(term), F.lit(0)).cast("bigint").alias("max_term"),
-            F.coalesce(F.sum(term), F.lit(0)).cast("bigint").alias("pairs_bound"),
-        )
-    )
+    return _pair_audit(load_events(spark, sf_dir)).drop("pairs_bound_dbl")
 
 
 @q(
@@ -936,65 +1019,8 @@ def stream_pair_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     3.05e9 bound) and names the row-identical batch twin
     ``events_attribution`` as the bounded tier (see the guard block
     above)."""
-    import os
-    import tempfile
-    from pathlib import Path
-
     _guard_stream_replay(spark, sf_dir, "stream_pair_join", "events_attribution")
-
-    ts_t = events_raw_ts_type(spark, sf_dir)
-    raw_schema = (
-        f"event_id bigint, ts {ts_t}, user_id bigint, event_type string, value double, props string"
-    )
-
-    def src(tag: str) -> DataFrame:
-        stage = Path(tempfile.mkdtemp(prefix=f"bdap_stream_pair_{tag}_"))
-        atexit.register(shutil.rmtree, stage, ignore_errors=True)
-        _stage_table_files(stage, sf_dir, "events")
-        return normalize_events_ts(
-            spark.readStream.schema(raw_schema).format("parquet").load(str(stage))
-        )
-
-    clicks = (
-        src("c")
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            "user_id",
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "2 hours")
-    )
-    purchases = (
-        src("p")
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "2 hours")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("c_ts"))
-        & (F.col("p_ts") <= F.col("c_ts") + F.expr("interval 1 hour")),
-    ).select(
-        "click_id",
-        "purchase_id",
-        "user_id",
-        (F.unix_micros("p_ts") - F.unix_micros("c_ts")).alias("gap_us"),
-    )
-    _drain(
-        spark,
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("bdap_stream_pair_join")
-        .trigger(availableNow=True),
-        _stream_partitions(spark, sf_dir),
-    )
-    return spark.table("bdap_stream_pair_join")
+    return run_stream(spark, sf_dir, "bdap_stream_pair_join", _stream_attribution)
 
 
 STREAM_TAIL_HOURS = 6
@@ -1038,9 +1064,7 @@ def stream_backfill_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     above, so the route contract is EXACT, not one-sided, and
     ``routed_backfill_tail`` (the facade) stays oracle-valid on every
     corpus whichever tier runs."""
-    import tempfile
-    from datetime import timedelta
-    from pathlib import Path
+    from datetime import datetime, timedelta
 
     ev = load_events(spark, sf_dir)
     # the pre-flight scalars (corpus max_ts, tail state-cross profile)
@@ -1052,25 +1076,16 @@ def stream_backfill_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ._memo import snapshot_memo
 
     def _preflight():
-        # corpus max_ts from the parquet footer when available (r14,
-        # guide §6): the MAX aggregation is the preflight's only FULL
-        # corpus scan (the tail profile below prunes row groups via the
-        # pushed ts >= split predicate). The datetime construction
-        # replicates pyspark's own TimestampType.fromInternal exactly
-        # (integer seconds + microsecond replace), so the F.lit
-        # round-trip is bit-identical to the collected value's.
-        bounds = _events_ts_bounds_us(sf_dir)
-        if bounds is not None:
-            from datetime import datetime
-
-            hi_us = bounds[1]
-            m = datetime.fromtimestamp(hi_us // 1_000_000).replace(
-                microsecond=hi_us % 1_000_000
-            )
-        else:  # pragma: no cover — every driver corpus has stats
-            m = ev.agg(F.max("ts").alias("m")).collect()[0]["m"]
-        if m is None:
+        # the datetime construction replicates pyspark's own
+        # TimestampType.fromInternal exactly (integer seconds +
+        # microsecond replace), so the F.lit round-trip is bit-identical
+        # to a collected MAX(ts) value
+        hi_us = _ts_bounds(spark, sf_dir, ev)[1]
+        if hi_us is None:
             return None, None
+        m = datetime.fromtimestamp(hi_us // 1_000_000).replace(
+            microsecond=hi_us % 1_000_000
+        )
         s = m - timedelta(hours=STREAM_TAIL_HOURS)
         return s, stream_pair_profile(ev.filter(F.col("ts") >= F.lit(s)))
 
@@ -1104,95 +1119,19 @@ def stream_backfill_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     hist = _attribution_join(
         clicks.filter(F.col("c_ts") < F.lit(split)), purchases, "inner"
     )
-
-    # streaming half: stage the tail snapshot (normalized ts), replay
-    # the watermarked join over it — two independent readStream
-    # instances over the one staged copy
-    stage = Path(tempfile.mkdtemp(prefix="bdap_backfill_tail_"))
-    atexit.register(shutil.rmtree, stage, ignore_errors=True)
-    # SINGLE-FILE stage (ADVICE r12): the replay's row-for-row equality
-    # with the batch half relies on the whole tail landing in ONE
-    # micro-batch — if the file source ever split unordered part files
-    # across micro-batches, the 2h watermarks could evict click/
-    # purchase state before a matching row arrived and silently drop
-    # valid pairs. availableNow with no maxFilesPerTrigger reads all
-    # files in one batch today; one staged file makes the invariant
-    # structural rather than an option default. repartition(1), NOT
-    # coalesce(1): coalesce propagates up the narrow chain and would
-    # serialize the corpus-sized events scan+filter into one task,
-    # while repartition shuffles only the already-filtered tail rows
-    # to the single writer (the scan stays 32-way). The write itself
-    # is one task by design; only the tail (hours, not history)
-    # crosses the shuffle.
-    tail.select("event_id", "ts", "user_id", "event_type").repartition(
-        1
-    ).write.mode("overwrite").parquet(str(stage / "events"))
-    sch = "event_id bigint, ts timestamp, user_id bigint, event_type string"
-
-    def src() -> DataFrame:
-        return (
-            spark.readStream.schema(sch)
-            .format("parquet")
-            .load(str(stage / "events"))
-        )
-
-    s_clicks = (
-        src()
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            "user_id",
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "2 hours")
+    # streaming half: the tail staged as ONE batch frame, so one file
+    # and one micro-batch. The replay's row-for-row equality with the
+    # batch half relies on that: split across micro-batches, the 2h
+    # watermarks could evict click/purchase state before a matching
+    # row arrived and silently drop valid pairs.
+    tail_half = run_stream(
+        spark, sf_dir, "bdap_backfill_tail", _stream_attribution,
+        source=[tail.select("event_id", "ts", "user_id", "event_type")],
     )
-    s_purchases = (
-        src()
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "2 hours")
-    )
-    tail_joined = s_clicks.join(
-        s_purchases,
-        (F.col("user_id") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("c_ts"))
-        & (F.col("p_ts") <= F.col("c_ts") + F.expr("interval 1 hour")),
-    ).select(
-        "click_id",
-        "purchase_id",
-        "user_id",
-        (F.unix_micros("p_ts") - F.unix_micros("c_ts")).alias("gap_us"),
-    )
-    _drain(
-        spark,
-        tail_joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("bdap_backfill_tail")
-        .trigger(availableNow=True),
-        _stream_partitions(spark, sf_dir),
-    )
-    return hist.unionByName(spark.table("bdap_backfill_tail"))
+    return hist.unionByName(tail_half)
 
 
-@q("sessionize_builtin", _SESSIONIZE_ORACLE)
-def sessionize_builtin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap sessionization via Spark's NATIVE ``session_window`` — the
-    idiomatic one-operator form of ``sessionize`` (which builds the
-    same thing from lag-flag + running sum). One groupBy, fully
-    JVM-side, and the operator is streaming-ready as-is (the same
-    expression works under readStream + watermark).
-
-    Boundary contract matches the lag-based key exactly (verified, not
-    assumed: ``session_window``'s merge is INCLUSIVE of the session
-    end, so a gap of exactly SESSION_GAP_MIN stays in the session and
-    one microsecond more splits — the same ``>`` semantics as
-    ``sessionize``, hence the shared oracle).
-    tests/test_boundaries.py pins both sides of the edge."""
-    ev = load_events(spark, sf_dir)
+def _native_sessions(ev: DataFrame) -> DataFrame:
     return (
         ev.groupBy(
             F.session_window("ts", f"{SESSION_GAP_MIN} minutes").alias("w"),
@@ -1211,6 +1150,23 @@ def sessionize_builtin(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@q("sessionize_builtin", _SESSIONIZE_ORACLE)
+def sessionize_builtin(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gap sessionization via Spark's NATIVE ``session_window`` — the
+    idiomatic one-operator form of ``sessionize`` (which builds the
+    same thing from lag-flag + running sum). One groupBy, fully
+    JVM-side, and the operator is streaming-ready as-is (the same
+    expression works under readStream + watermark).
+
+    Boundary contract matches the lag-based key exactly (verified, not
+    assumed: ``session_window``'s merge is INCLUSIVE of the session
+    end, so a gap of exactly SESSION_GAP_MIN stays in the session and
+    one microsecond more splits — the same ``>`` semantics as
+    ``sessionize``, hence the shared oracle).
+    tests/test_boundaries.py pins both sides of the edge."""
+    return _native_sessions(load_events(spark, sf_dir))
+
+
 @q("stream_session_builtin")  # rows-only: native streaming session windows
 def stream_session_builtin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``sessionize_builtin``'s body run as a REAL streaming query —
@@ -1223,40 +1179,12 @@ def stream_session_builtin(spark: SparkSession, sf_dir: str) -> DataFrame:
     fine against the test-only memory sink, while a production sink
     uses append mode, where the watermark closes sessions and only
     finished sessions emit. Equivalence vs the batch key is asserted
-    row-for-row in tests/test_recall.py.
-
-    Perf note (r3 verdict asked): the 1.38s->2.91s swing in BENCH_r03
-    was host noise, not structural — re-measured standalone at sf0.1
-    in r4: 1.3-1.6s across repeated runs, identical staging (single
-    symlinked file, one availableNow trigger) in both rounds."""
-
-    stream = _stage_events_stream(spark, sf_dir, "bdap_stream_sessb_")
-    agg = (
-        stream.withWatermark("ts", "2 hours")
-        .groupBy(
-            F.session_window("ts", f"{SESSION_GAP_MIN} minutes").alias("w"),
-            "user_id",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-        .select(
-            "user_id",
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
-            "n_events",
-            "total_value",
-        )
+    row-for-row in tests/test_recall.py."""
+    return run_stream(
+        spark, sf_dir, "bdap_stream_session_builtin",
+        lambda read: _native_sessions(read().withWatermark("ts", "2 hours")),
+        mode="complete",
     )
-    _drain(
-        spark,
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("bdap_stream_session_builtin")
-        .trigger(availableNow=True),
-        _stream_partitions(spark, sf_dir),
-    )
-    return spark.table("bdap_stream_session_builtin")
 
 
 @q("stream_foreach_batch")  # rows-only: foreachBatch durable-sink bridge
@@ -1272,36 +1200,9 @@ def stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     mart). The memory-sink keys above are test-only; this one writes
     the real files. Final mart equals the batch ``window_tumbling``
     output row-for-row (tests/test_recall.py)."""
-    import os
-    import tempfile
-    from pathlib import Path
-
-    ts_t = events_raw_ts_type(spark, sf_dir)
-    raw_schema = (
-        f"event_id bigint, ts {ts_t}, user_id bigint, event_type string, value double, props string"
-    )
-    stage = Path(tempfile.mkdtemp(prefix="bdap_stream_feb_src_"))
-    atexit.register(shutil.rmtree, stage, ignore_errors=True)
-    _stage_table_files(stage, sf_dir, "events")
+    # the returned frame reads the mart lazily, so it lives until exit
     mart = Path(tempfile.mkdtemp(prefix="bdap_stream_feb_mart_"))
     atexit.register(shutil.rmtree, mart, ignore_errors=True)
-    stream = normalize_events_ts(
-        spark.readStream.schema(raw_schema).format("parquet").load(str(stage))
-    )
-    agg = (
-        stream.withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
@@ -1321,24 +1222,22 @@ def stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         fresh.write.mode("overwrite").parquet(str(mart / f"v{prev + 1}"))
         pointer.write_text(str(prev + 1))
 
-    _drain(
-        spark,
-        agg.writeStream.outputMode("update")
-        .foreachBatch(merge_batch)
-        .trigger(availableNow=True),
-        _stream_partitions(spark, sf_dir),
+    run_stream(
+        spark, sf_dir, "bdap_stream_foreach_batch",
+        lambda read: _hourly(read().withWatermark("ts", "2 hours")),
+        mode="update", sink=merge_batch,
     )
     latest = int((mart / "_LATEST").read_text())
     return spark.read.parquet(str(mart / f"v{latest}"))
 
 
 def incremental_hourly_runs(spark: SparkSession, sf_dir: str):
-    """Two ``trigger(availableNow=True)`` RUNS of one hourly-aggregate
-    query over a landing directory that gains files between runs,
-    sharing a single checkpoint — the file-arrival re-run contract of
-    the reference's 30-day scheduler loop (ref:
-    tb_data_collection.py:352-393, main_orchestrator.py 'schedule'
-    mode), done incrementally instead of as a full recompute.
+    """Two availableNow RUNS of one hourly-aggregate query over a
+    landing directory that gains files between runs, sharing a single
+    checkpoint — the file-arrival re-run contract of the reference's
+    30-day scheduler loop (ref: tb_data_collection.py:352-393,
+    main_orchestrator.py 'schedule' mode), done incrementally instead
+    of as a full recompute.
 
     Run 1 sees batch-1 files; batch-2 files then land; run 2 restarts
     from the checkpoint and reads ONLY the new files (the file-source
@@ -1347,19 +1246,13 @@ def incremental_hourly_runs(spark: SparkSession, sf_dir: str):
     recompute over everything. Returns ``(mart_df, stats)`` where
     stats carries per-run input-row counts so tests can assert the
     second run was genuinely incremental, and batch row counts so they
-    can assert coverage. total_value sums exact integer cents (FLOOR
-    x100) — incremental state merge changes double accumulation order,
-    so a raw double sum could round differently from the one-shot
-    oracle at .005 boundaries.
+    can assert coverage. total_value sums exact integer cents (see
+    ``_hourly``).
     """
-    import shutil
-    import tempfile
-    from pathlib import Path
+    import pyarrow.parquet as pq
 
-    ts_t = events_raw_ts_type(spark, sf_dir)
-    raw_schema = (
-        f"event_id bigint, ts {ts_t}, user_id bigint, event_type string, value double, props string"
-    )
+    raw_schema = _events_schema(spark, sf_dir)
+    # the returned frame reads the mart lazily, so it lives until exit
     root = Path(tempfile.mkdtemp(prefix="bdap_incremental_"))
     atexit.register(shutil.rmtree, root, ignore_errors=True)
     landing, ckpt, mart = root / "landing", root / "ckpt", root / "mart"
@@ -1367,13 +1260,10 @@ def incremental_hourly_runs(spark: SparkSession, sf_dir: str):
 
     # deterministic 2-way split of the events feed, written in the raw
     # on-disk schema so the file stream reads both batches identically.
-    # ONE partitioned write produces both splits (r14, guide §2.4: two
-    # filtered writes re-scanned the feed twice); partitionBy drops the
+    # ONE partitioned write produces both splits; partitionBy drops the
     # split column from the data files, so each part file keeps exactly
     # the raw schema. batch_rows comes from the written files' parquet
-    # footers (row counts are footer metadata, exact) instead of two
-    # count jobs — the same metadata-for-scan trade as
-    # _events_ts_bounds_us, and independent evidence for the
+    # footers (exact metadata), independent evidence for the
     # incrementality assertion (not derived from streaming progress).
     raw = spark.read.schema(raw_schema).parquet(f"{sf_dir}/events.parquet")
     split_root = root / "split"
@@ -1383,32 +1273,13 @@ def incremental_hourly_runs(spark: SparkSession, sf_dir: str):
         .parquet(str(split_root))
     )
     batches = [split_root / f"b={i}" for i in (0, 1)]
-
-    def _footer_rows(bdir: Path) -> int:
-        import pyarrow.parquet as pq
-
-        return sum(
-            pq.ParquetFile(f).metadata.num_rows
-            for f in sorted(bdir.glob("part-*.parquet"))
-        )
-
-    batch_rows = [_footer_rows(b) for b in batches]
+    batch_rows = [
+        sum(pq.ParquetFile(f).metadata.num_rows for f in sorted(b.glob("part-*.parquet")))
+        for b in batches
+    ]
 
     stream = normalize_events_ts(
         spark.readStream.schema(raw_schema).format("parquet").load(str(landing))
-    )
-    agg = (
-        stream.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.floor(F.col("value") * 100)).alias("cents"),
-        )
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "event_type",
-            "n_events",
-            (F.col("cents").cast("double") / 100).alias("total_value"),
-        )
     )
 
     def snapshot(batch_df: DataFrame, batch_id: int) -> None:
@@ -1416,35 +1287,24 @@ def incremental_hourly_runs(spark: SparkSession, sf_dir: str):
         # overwriting yields an always-consistent mart snapshot
         batch_df.write.mode("overwrite").parquet(str(mart))
 
-    def land(bdir: Path) -> None:
-        for f in bdir.glob("part-*"):
-            shutil.copy(f, landing / f"{bdir.name}-{f.name}")
-
-    stats = {"batch_rows": batch_rows, "run_input_rows": []}
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(_stream_partitions(spark, sf_dir))
+    writer = (
+        _hourly(stream, cents=True)
+        .writeStream.outputMode("complete")
+        .foreachBatch(snapshot)
+        .option("checkpointLocation", str(ckpt))
     )
+    parts = _stream_partitions(spark, sf_dir)
+    stats = {"batch_rows": batch_rows, "run_input_rows": []}
     try:
         for bdir in batches:
-            land(bdir)
-            query = (
-                agg.writeStream.outputMode("complete")
-                .foreachBatch(snapshot)
-                .option("checkpointLocation", str(ckpt))
-                .trigger(availableNow=True)
-                .start()
-            )
-            query.awaitTermination()
+            for f in bdir.glob("part-*"):
+                shutil.copy(f, landing / f"{bdir.name}-{f.name}")
+            query = _start(spark, writer, parts)
             stats["run_input_rows"].append(
                 int(sum(p["numInputRows"] for p in query.recentProgress))
             )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        # both runs have terminated: only the mart (read lazily by the
-        # returned DataFrame) must outlive the call — drop the feed
-        # split and the checkpoint so repeated bench/test cycles don't
-        # accumulate /tmp usage
+        # only the mart must outlive the call
         for d in (landing, ckpt, split_root):
             shutil.rmtree(d, ignore_errors=True)
     return spark.read.parquet(str(mart)), stats
@@ -1485,123 +1345,39 @@ def stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-empty, correct subset of the batch anti-join side).
 
     To make eviction actually happen under ``availableNow``, the
-    events are staged as 4 time-quartile files with ascending mtimes
-    and replayed with ``maxFilesPerTrigger=1`` — each micro-batch
-    advances the watermark ~7.5 days, closing the prior batch's state.
-    State per side stays bounded by (join window + delay) of events,
-    independent of stream length — the 100 TB property.
+    events are staged as 4 time-quartile batches replayed one per
+    micro-batch — each advances the watermark ~7.5 days, closing the
+    prior batch's state. State per side stays bounded by (join window
+    + delay) of events, independent of stream length — the 100 TB
+    property.
 
     Round 11: the replay is GUARDED like ``stream_pair_join`` (same
     per-user state-cross bill); the declared tier is
     ``events_attribution_outer`` — matched rows identical, null rows a
     superset (the complete anti-join side, where bounded replay
     withholds end-of-stream clicks)."""
-    import os
-    import shutil
-    import tempfile
-    from pathlib import Path
-
     _guard_stream_replay(
         spark, sf_dir, "stream_outer_join", "events_attribution_outer"
     )
-
     ev = load_events(spark, sf_dir).select(
         "event_id", "ts", "user_id", "event_type"
     )
-    # quartile bounds from parquet footer statistics when available
-    # (r14, guide §6): the scalar MIN/MAX aggregation is a full corpus
-    # scan per call at 100 TB; the footer pass reads only metadata and
-    # is bit-identical (see _events_ts_bounds_us)
-    bounds = _events_ts_bounds_us(sf_dir)
-    if bounds is None:  # pragma: no cover — every driver corpus has stats
-        b = ev.select(
-            F.unix_micros(F.min("ts")).alias("lo"),
-            F.unix_micros(F.max("ts")).alias("hi"),
-        ).collect()[0]
-        bounds = (b.lo, b.hi)
-    lo, hi = bounds
+    lo, hi = _ts_bounds(spark, sf_dir, ev)
     n_files = 4
     span = (hi - lo) // n_files + 1
-    stage = Path(tempfile.mkdtemp(prefix="bdap_stream_outer_"))
-    atexit.register(shutil.rmtree, stage, ignore_errors=True)
-    # stage ONLY the event types the join consumes (guide §2.3: filter
-    # before the heavy bytes move): every other type would be written,
-    # re-scanned per micro-batch, and then dropped by both branch
-    # filters anyway. The quartile boundaries above are computed over
-    # the FULL table first, so batch composition — and with it the
-    # watermark progression and the emitted row set — is unchanged.
+    # stage ONLY the event types the join consumes: every other type
+    # would be written, re-scanned per micro-batch, and then dropped by
+    # both branch filters anyway. The quartile boundaries above are
+    # computed over the FULL table first, so batch composition — and
+    # with it the watermark progression and the emitted row set — is
+    # unchanged.
     ev = ev.filter(F.col("event_type").isin("click", "purchase"))
-    # ONE partitioned write produces all quartile files (vs 4 separate
-    # filter+write jobs), then each part file moves to the stage root
-    # with ascending mtimes so the file source replays them in
-    # event-time order
-    tmp = stage / "_w"
-    (
-        ev.withColumn(
-            "q", ((F.unix_micros("ts") - F.lit(lo)) / F.lit(span)).cast("int")
-        )
-        .repartition(n_files, "q")
-        .write.partitionBy("q")
-        .mode("overwrite")
-        .parquet(str(tmp))
+    quartile = ((F.unix_micros("ts") - F.lit(lo)) / F.lit(span)).cast("int")
+    return run_stream(
+        spark, sf_dir, "bdap_stream_outer_join",
+        lambda read: _stream_attribution(read, "leftOuter", "10 minutes"),
+        source=[ev.filter(quartile == i) for i in range(n_files)],
     )
-    for i in range(n_files):
-        qdir = tmp / f"q={i}"
-        if not qdir.exists():  # an empty quartile writes no directory
-            continue
-        pf = next(qdir.glob("part-*.parquet"))
-        dst = stage / f"batch_{i}.parquet"
-        shutil.move(str(pf), dst)
-        os.utime(dst, (1_000_000_000 + i * 1000, 1_000_000_000 + i * 1000))
-    shutil.rmtree(tmp)
-
-    sch = "event_id bigint, ts timestamp, user_id bigint, event_type string"
-    raw = (
-        spark.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(str(stage))
-    )
-    clicks = (
-        raw.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"), "user_id", F.col("ts").alias("c_ts")
-        )
-        .withWatermark("c_ts", "10 minutes")
-    )
-    purchases = (
-        raw.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "10 minutes")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("c_ts"))
-        & (F.col("p_ts") <= F.col("c_ts") + F.expr("interval 1 hour")),
-        "leftOuter",
-    ).select(
-        "click_id",
-        "purchase_id",
-        "user_id",
-        (F.unix_micros("p_ts") - F.unix_micros("c_ts")).alias("gap_us"),
-    )
-    _drain(
-        spark,
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("bdap_stream_outer_join")
-        .trigger(availableNow=True),
-        _stream_partitions(spark, sf_dir),
-    )
-    # full data copy — remove once drained so bench/test cycles don't
-    # accumulate /tmp usage (the memory sink holds the results)
-    shutil.rmtree(stage, ignore_errors=True)
-    return spark.table("bdap_stream_outer_join")
 
 
 @q(
@@ -1676,60 +1452,22 @@ def stream_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
     at-least-once-source contract (e.g. Kafka redelivery), where dup
     arrivals cluster near the original by construction.
 
-    Staged as two files replayed with maxFilesPerTrigger=1: batch 2
+    Staged as two batches replayed one per micro-batch: batch 2
     re-delivers the last 2 h of batch 1's events (inside the 4 h
     watermark, so suppression is GUARANTEED) alongside the later half
     of the stream. tests/test_recall.py asserts exact set equality
     with the batch distinct — every event exactly once."""
-    import os
-    import shutil
-    import tempfile
-    from pathlib import Path
-
     ev = load_events(spark, sf_dir).select("event_id", "ts", "event_type")
-    # split bounds from footer statistics, aggregation fallback — same
-    # metadata-for-scan trade as stream_outer_join (r14, guide §6)
-    bounds = _events_ts_bounds_us(sf_dir)
-    if bounds is None:  # pragma: no cover — every driver corpus has stats
-        b = ev.select(
-            F.unix_micros(F.min("ts")).alias("lo"),
-            F.unix_micros(F.max("ts")).alias("hi"),
-        ).collect()[0]
-        bounds = (b.lo, b.hi)
-    mid = (bounds[0] + bounds[1]) // 2
+    lo, hi = _ts_bounds(spark, sf_dir, ev)
+    mid = (lo + hi) // 2
     two_h = 2 * 3600 * 1_000_000
     b1 = ev.filter(F.unix_micros("ts") <= mid)
     redelivered = b1.filter(F.unix_micros("ts") > mid - two_h)
     b2 = ev.filter(F.unix_micros("ts") > mid).unionByName(redelivered)
-
-    stage = Path(tempfile.mkdtemp(prefix="bdap_stream_dedup_wm_"))
-    atexit.register(shutil.rmtree, stage, ignore_errors=True)
-    for i, frame in enumerate((b1, b2)):
-        tmp = stage / f"_w{i}"
-        frame.coalesce(1).write.mode("overwrite").parquet(str(tmp))
-        pf = next(tmp.glob("part-*.parquet"))
-        dst = stage / f"batch_{i}.parquet"
-        shutil.move(str(pf), dst)
-        os.utime(dst, (1_000_000_000 + i * 1000,) * 2)
-        shutil.rmtree(tmp)
-
-    raw = (
-        spark.readStream.schema("event_id bigint, ts timestamp, event_type string")
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(str(stage))
-    )
-    deduped = raw.withWatermark("ts", "4 hours").dropDuplicatesWithinWatermark(
-        ["event_id"]
-    )
-    _drain(
-        spark,
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("bdap_stream_dedup_wm")
-        .trigger(availableNow=True),
-        _stream_partitions(spark, sf_dir),
-    )
-    # full data copy — remove once drained (memory sink holds results)
-    shutil.rmtree(stage, ignore_errors=True)
-    return spark.table("bdap_stream_dedup_wm").select("event_id", "event_type")
+    return run_stream(
+        spark, sf_dir, "bdap_stream_dedup_wm",
+        lambda read: read()
+        .withWatermark("ts", "4 hours")
+        .dropDuplicatesWithinWatermark(["event_id"]),
+        source=[b1, b2],
+    ).select("event_id", "event_type")

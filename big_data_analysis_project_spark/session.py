@@ -20,10 +20,15 @@ from __future__ import annotations
 
 import os
 import sys
+from pathlib import Path
 
 from pyspark.sql import SparkSession
 
 __all__ = ["env_int", "get_spark", "run_config", "stop_spark"]
+
+# the directory holding this package: Python workers import the
+# package's UDFs and kernels from here, whatever their working directory
+_PACKAGE_PARENT = str(Path(__file__).resolve().parent.parent)
 
 
 def env_int(name: str, default):
@@ -92,6 +97,12 @@ def get_spark(
         # mutates session conf as a side effect.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        # Python workers import from their working directory, so
+        # without this a UDF key finds the package only when the
+        # process started in the repo root (ModuleNotFoundError from
+        # any other cwd). Spark prepends its own pyspark path and
+        # appends the process PYTHONPATH.
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     if master is not None:
         builder = builder.master(master)

@@ -58,3 +58,33 @@ def test_mm_decode_meta_multi_batch(spark):
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
     assert small == baseline and len(baseline) == 500
+
+
+def test_mm_resize_from_foreign_cwd_without_pythonpath(spark, tmp_path):
+    """Python workers must import the package whatever the process's
+    working directory: a get_spark session started from a temp dir,
+    with PYTHONPATH unset, runs the mapInPandas key to the same row
+    count as the session started from the repo root."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = str(Path(__file__).resolve().parent.parent)
+    code = (
+        f"import sys; sys.path.insert(0, {repo!r})\n"
+        "from big_data_analysis_project_spark.session import get_spark\n"
+        "from big_data_analysis_project_spark.registry import QUERIES\n"
+        "spark = get_spark(app_name='foreign-cwd', master='local[2]')\n"
+        f"print('ROWS', QUERIES['mm_resize'](spark, {SF_SMOKE!r}).count())\n"
+        "spark.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    rows = [ln for ln in out.stdout.splitlines() if ln.startswith("ROWS ")]
+    want = QUERIES["mm_resize"](spark, SF_SMOKE).count()
+    assert rows == [f"ROWS {want}"] and want > 0

@@ -191,3 +191,16 @@ def test_read_jdbc_predicates_partition_and_filter(spark):
     full = read_jdbc(spark, _DERBY_URL, "bdap_customer_mart", _DERBY_PROPS)
     expected = full.filter("c_nationkey IN (3, 5)").count()
     assert df.count() == expected > 0
+
+
+@pytest.mark.parametrize("key", ["sink_sorted", "sink_zorder"])
+def test_per_call_sink_copies_live_under_the_sink_root(spark, key):
+    """The per-call output copy of each key is created under the
+    module's sink root, which is deleted at exit, not as a bare temp
+    dir that outlives the process."""
+    from big_data_analysis_project_spark.registry import QUERIES
+    from big_data_analysis_project_spark.registry.extended_q import _SINK_ROOT
+
+    files = QUERIES[key](spark, SF_SMOKE).inputFiles()
+    root = _SINK_ROOT.resolve().as_uri()
+    assert files and all(f.startswith(root + "/") for f in files), files
