@@ -8,8 +8,8 @@ from .cleaning import (
     repair_swapped_columns,
 )
 from .reshape import pivot_indicators, unpivot
-from .joins import left_join_population, broadcast_dim_join, salted_join
-from .aggregates import scalar_max, grouped_multi_agg, quality_report
+from .joins import left_join_population, salted_join
+from .aggregates import quality_report
 from .windows import rank_by, latest_per_key, topk_per_group
 
 __all__ = [
@@ -23,10 +23,7 @@ __all__ = [
     "pivot_indicators",
     "unpivot",
     "left_join_population",
-    "broadcast_dim_join",
     "salted_join",
-    "scalar_max",
-    "grouped_multi_agg",
     "quality_report",
     "rank_by",
     "latest_per_key",

@@ -1,7 +1,7 @@
-"""Aggregation operators A1-A8 (SURVEY.md §2.5) and the data-quality
-report (§2.12).
+"""The data-quality report (SURVEY.md §2.12). The aggregations A1-A8
+(§2.5) are registry keys.
 
-All grouped aggregates here compile to partial (map-side) + final
+All grouped aggregates compile to partial (map-side) + final
 aggregation in Spark's physical plan, so the shuffle carries one row
 per group per mapper — the reason a groupBy over 100 TB is fine as
 long as the group count is bounded.
@@ -9,55 +9,10 @@ long as the group count is bounded.
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
+from collections.abc import Mapping
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def scalar_max(df: DataFrame, col: str):
-    """A1: global max as a driver scalar (one-row action).
-    ref: spark_data_processor.py:601."""
-    return df.agg(F.max(col)).collect()[0][0]
-
-
-def scalar_minmax(df: DataFrame, col: str) -> tuple:
-    """A4: min+max in a single pass. ref: spark_data_processor.py:733."""
-    row = df.select(F.min(col).alias("lo"), F.max(col).alias("hi")).collect()[0]
-    return row["lo"], row["hi"]
-
-
-def grouped_multi_agg(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    aggs: Mapping[str, Column],
-) -> DataFrame:
-    """A2: groupBy + multi-agg with aliases.
-    ref: spark_data_processor.py:612-620 (sum x4 + avg x2 per year)."""
-    return df.groupBy(*group_cols).agg(*[expr.alias(name) for name, expr in aggs.items()])
-
-
-def count_per_group(df: DataFrame, group_cols: Sequence[str], alias: str = "n") -> DataFrame:
-    """A3: grouped counts. ref: spark_data_processor.py:736-741."""
-    return df.groupBy(*group_cols).agg(F.count(F.lit(1)).alias(alias))
-
-
-def distinct_count(df: DataFrame, col: str) -> int:
-    """A5: exact distinct count (driver scalar). At 100 TB prefer
-    ``approx_count_distinct`` unless exactness is contractual.
-    ref: spark_data_processor.py:732."""
-    return df.select(F.countDistinct(col).alias("n")).collect()[0]["n"]
-
-
-def sql_stats(df: DataFrame, key_col: str, year_col: str = "year") -> DataFrame:
-    """A6: COUNT(*), MIN/MAX(year), COUNT(DISTINCT key) in one pass.
-    ref: flask_api_server.py:771-774."""
-    return df.select(
-        F.count(F.lit(1)).alias("total_records"),
-        F.min(year_col).alias("min_year"),
-        F.max(year_col).alias("max_year"),
-        F.countDistinct(key_col).alias("n_keys"),
-    )
 
 
 def quality_report(
@@ -85,9 +40,3 @@ def quality_report(
     for name, cond in checks.items():
         agg_cols.append(F.sum(F.when(cond, 1).otherwise(0)).alias(name))
     return df.select(*agg_cols)
-
-
-def completeness_by_key(df: DataFrame, key_col: str = "iso3", alias: str = "records") -> DataFrame:
-    """Per-key completeness portion of the quality report.
-    ref: spark_data_processor.py:736-741."""
-    return df.groupBy(key_col).agg(F.count(F.lit(1)).alias(alias)).orderBy(key_col)

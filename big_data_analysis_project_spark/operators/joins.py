@@ -30,24 +30,6 @@ def left_join_population(
     return joined
 
 
-def broadcast_dim_join(
-    facts: DataFrame,
-    dim: DataFrame,
-    on: Sequence[str] | str,
-    how: str = "inner",
-) -> DataFrame:
-    """J2: broadcast join against a small dimension.
-
-    ref: flask_api_server.py:421-442,560-580 — the client-side ISO3 ->
-    coords dict lookup (drop-if-absent, i.e. inner). The explicit
-    ``F.broadcast`` hint guarantees a map-side join regardless of
-    stats, which is exactly what you want for a dimension that is tiny
-    relative to a 100 TB fact side.
-    """
-    on_cols = [on] if isinstance(on, str) else list(on)
-    return facts.join(F.broadcast(dim), on=on_cols, how=how)
-
-
 def salted_join(
     big: DataFrame,
     skewed_small: DataFrame,

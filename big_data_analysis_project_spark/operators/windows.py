@@ -6,9 +6,9 @@ functions.
 
 Scale note: a global ``Window.orderBy`` (no partitionBy) funnels all
 rows through one task — fine for mart-sized inputs (the reference's
-use), wrong for raw facts. For large inputs use ``topk_global`` which
-does a per-partition top-k then a tiny final merge (orderBy+limit is
-exactly that via Spark's TakeOrderedAndProject).
+use), wrong for raw facts. For a large global top-k, orderBy+limit
+compiles to Spark's TakeOrderedAndProject: a per-partition top-k then
+a tiny final merge.
 """
 
 from __future__ import annotations
@@ -261,11 +261,3 @@ def topk_per_group(
     order += [F.asc(c) for c in tiebreak_cols]
     w = Window.partitionBy(*group_cols).orderBy(*order)
     return df.withColumn(alias, F.row_number().over(w)).filter(F.col(alias) <= k)
-
-
-def topk_global(df: DataFrame, order_col: str, k: int, desc: bool = True) -> DataFrame:
-    """Global top-k that scales: orderBy+limit compiles to
-    TakeOrderedAndProject (per-partition heap + driver merge of k rows
-    per partition), never a full global sort."""
-    order = F.desc(order_col) if desc else F.asc(order_col)
-    return df.orderBy(order).limit(k)

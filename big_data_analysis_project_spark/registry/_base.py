@@ -5,6 +5,12 @@ exactly one place."""
 
 from __future__ import annotations
 
+import atexit
+import functools
+import shutil
+import tempfile
+from pathlib import Path
+
 from ..errors import ScaleRefusal
 
 __all__ = [
@@ -14,7 +20,20 @@ __all__ = [
     "ScaleRefusal",
     "local_values_df",
     "make_registry",
+    "sink_root",
 ]
+
+
+@functools.cache
+def sink_root() -> Path:
+    """The process's one directory for the sink keys' outputs, created
+    on first use (importing the registry writes nothing) and removed at
+    interpreter exit. Per process, so concurrently running harness
+    processes never race on the same output paths; within one process
+    the keys write to fixed names under it."""
+    root = Path(tempfile.mkdtemp(prefix="bdap_sinks_"))
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
 
 
 def local_values_df(spark, rows, cols_ddl: str):

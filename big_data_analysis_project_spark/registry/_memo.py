@@ -23,9 +23,10 @@ import functools
 import threading
 from collections.abc import Callable
 from dataclasses import dataclass
-from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+from ..sources.snapshot import fingerprint
 
 # Guards cache BOOKKEEPING (eviction scans + lookup/insert), never the
 # builds themselves: warm_shared_artifacts runs independent builders
@@ -84,25 +85,6 @@ def release_snapshot(sf_dir: str) -> int:
     return dropped
 
 
-def snapshot_fingerprint(sf_dir: str) -> tuple:
-    """Cheap content fingerprint of a corpus snapshot directory:
-    sorted (relative name, size, mtime_ns) of every parquet file under
-    it — a pure-metadata stat walk, no data read. Folding this into a
-    memo key means a REWRITE of the parquet tables within one Spark
-    application invalidates the cached checkpoint/model instead of
-    silently serving the stale artifact (ADVICE r5 #4)."""
-    root = Path(sf_dir)
-    if not root.exists():
-        return ("<missing>",)
-    return tuple(
-        sorted(
-            (str(p.relative_to(root)), p.stat().st_size, p.stat().st_mtime_ns)
-            for p in root.rglob("*.parquet")
-            if p.is_file()
-        )
-    )
-
-
 def snapshot_memo(
     cache: dict,
     spark: SparkSession,
@@ -110,9 +92,11 @@ def snapshot_memo(
     build: Callable[[], object],
     extra=(),
 ):
-    """``session_memo`` keyed additionally on the snapshot fingerprint
-    of ``sf_dir``. ALL entries for the same ``sf_dir`` under an older
-    fingerprint are evicted first — deliberately ignoring ``extra``
+    """``session_memo`` keyed additionally on the snapshot
+    ``fingerprint`` of ``sf_dir``, so a rewrite of its parquet tables
+    within one application rebuilds the entry (ADVICE r5 #4). ALL
+    entries for the same ``sf_dir`` under an older fingerprint are
+    evicted first — deliberately ignoring ``extra``
     (ADVICE r6 #5): callers like ``batch_centroids_cached`` derive
     parts of ``extra`` from the snapshot's CONTENT (e.g. a row-count-
     proportional k), so a rewritten snapshot changes the extra and an
@@ -120,7 +104,7 @@ def snapshot_memo(
     application's lifetime. Stale-fingerprint artifacts are useless to
     every consumer regardless of their hyperparameters, so the wider
     sweep cannot evict anything still servable."""
-    fp = snapshot_fingerprint(sf_dir)
+    fp = fingerprint(spark, sf_dir)
     app = spark.sparkContext.applicationId
     with _MEMO_LOCK:
         for stale in [

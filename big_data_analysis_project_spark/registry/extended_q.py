@@ -12,8 +12,6 @@ double (oracle hash-compare rules learned in round 1).
 
 from __future__ import annotations
 
-import atexit
-import shutil
 import tempfile
 from contextlib import contextmanager
 from pathlib import Path
@@ -22,14 +20,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.readers import load_events, load_table
+from ..sources.snapshot import footer_bounds
 from .dedup_q import _NGRAM_ORACLE as _NGRAM_PAIR_SQL
 
-from ._base import ScaleRefusal, make_registry
+from ._base import ScaleRefusal, make_registry, sink_root
 
 QUERIES, ORACLE, q = make_registry()
-
-_SINK_ROOT = Path(tempfile.mkdtemp(prefix="bdap_ext_sinks_"))
-atexit.register(shutil.rmtree, _SINK_ROOT, ignore_errors=True)
 
 
 # --- joins -------------------------------------------------------------
@@ -547,7 +543,7 @@ def sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     makes partition pruning possible — a year-filtered query reads
     1/Nth of the data; the re-read here proves the round-trip
     preserves both the partition column and row payloads."""
-    out = str(_SINK_ROOT / "sink_partitioned")
+    out = str(sink_root() / "sink_partitioned")
     o = load_table(spark, sf_dir, "orders").withColumn(
         "order_year", F.year("o_orderdate").cast("int")
     )
@@ -577,8 +573,8 @@ def compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     file-count reduction itself is asserted in tests/test_sinks.py."""
     from .. import sinks
 
-    frag = str(_SINK_ROOT / "compact_in")
-    out = str(_SINK_ROOT / "compact_out")
+    frag = str(sink_root() / "compact_in")
+    out = str(sink_root() / "compact_out")
     load_events(spark, sf_dir).repartition(64).write.mode("overwrite").parquet(frag)
     sinks.compact_parquet(spark, frag, out)
     back = spark.read.parquet(out)
@@ -607,7 +603,7 @@ def schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     table accumulates. Footer merging is a planning-time cost; the
     scan itself stays columnar and per-batch prunable."""
     o = load_table(spark, sf_dir, "orders")
-    root = _SINK_ROOT / "schema_evo"
+    root = sink_root() / "schema_evo"
     v1 = o.filter(F.col("o_orderkey") % 2 == 0).select("o_orderkey", "o_custkey")
     v2 = o.filter(F.col("o_orderkey") % 2 == 1).select(
         "o_orderkey", "o_custkey", "o_totalprice"
@@ -760,8 +756,8 @@ def sink_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is THE layout decision: bucketing the fact table on
     its join key once turns every subsequent join/agg on that key into
     a shuffle-free stage."""
-    out_o = str(_SINK_ROOT / "bucketed_orders")
-    out_c = str(_SINK_ROOT / "bucketed_customer")
+    out_o = str(sink_root() / "bucketed_orders")
+    out_c = str(sink_root() / "bucketed_customer")
     (
         load_table(spark, sf_dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -1634,7 +1630,7 @@ def sink_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     high-cardinality ones). File-range disjointness is footer-verified
     in tests/test_boundaries.py."""
 
-    out = str(Path(tempfile.mkdtemp(prefix="sink_sorted_", dir=_SINK_ROOT)) / "orders_sorted")
+    out = str(Path(tempfile.mkdtemp(prefix="sink_sorted_", dir=sink_root())) / "orders_sorted")
     (
         load_table(spark, sf_dir, "orders")
         .select("o_orderkey", "o_custkey", F.round("o_totalprice", 2).alias("price"))
@@ -1678,53 +1674,6 @@ def variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _parquet_int_bounds(
-    sf_dir: str, table: str, cols: tuple[str, ...]
-) -> dict[str, tuple[int, int]] | None:
-    """Exact per-column (min, max) for integer columns read from the
-    parquet FOOTER statistics — a pure-metadata pass over row-group
-    headers, no data read (optimization r14, guide §6: "reuse table
-    statistics instead of the extra pass"; footer min/max is exactly
-    what catalog stats are derived from). Integer parquet statistics
-    are exact (no string truncation), so the bounds equal what the
-    MIN/MAX scalar aggregation they replace would compute. Returns
-    None — caller falls back to the aggregation — when any row group
-    lacks stats for any requested column or the footer is unreadable."""
-    import pyarrow.parquet as pq
-
-    src = Path(sf_dir) / f"{table}.parquet"
-    files = (
-        sorted(p for p in src.rglob("*.parquet") if p.is_file())
-        if src.is_dir()
-        else [src]
-    )
-    if not files:
-        return None
-    lo: dict[str, int] = {}
-    hi: dict[str, int] = {}
-    try:
-        for f in files:
-            md = pq.ParquetFile(f).metadata
-            names = {
-                md.row_group(0).column(i).path_in_schema: i
-                for i in range(md.num_columns)
-            } if md.num_row_groups else {}
-            if not set(cols) <= set(names):
-                return None
-            for rg in range(md.num_row_groups):
-                for c in cols:
-                    st = md.row_group(rg).column(names[c]).statistics
-                    if st is None or not st.has_min_max:
-                        return None
-                    lo[c] = min(lo.get(c, st.min), st.min)
-                    hi[c] = max(hi.get(c, st.max), st.max)
-    except Exception:  # noqa: BLE001 — stats are an optimization, never fatal
-        return None
-    if set(lo) != set(cols):
-        return None
-    return {c: (int(lo[c]), int(hi[c])) for c in cols}
-
-
 @q(
     "sink_zorder",
     """SELECT l_orderkey, l_partkey, l_suppkey,
@@ -1747,16 +1696,17 @@ def sink_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     min/max the previous scalar aggregation computed, read from
     row-group headers instead of a full corpus scan; at 100 TB this
     is the catalog-statistics lookup. A source without usable footer
-    stats falls back to the one scalar min/max pass."""
+    stats, or off the local file system, falls back to the one scalar
+    min/max pass."""
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_suppkey",
         F.round("l_extendedprice", 2).alias("price"),
     )
-    stats = _parquet_int_bounds(sf_dir, "lineitem", ("l_partkey", "l_suppkey"))
+    stats = footer_bounds(spark, sf_dir, "lineitem", ("l_partkey", "l_suppkey"))
     if stats is not None:
         (p_lo, p_hi), (s_lo, s_hi) = stats["l_partkey"], stats["l_suppkey"]
-    else:  # pragma: no cover — every driver corpus writes footer stats
+    else:
         b = li.select(
             F.min("l_partkey").alias("p_lo"), F.max("l_partkey").alias("p_hi"),
             F.min("l_suppkey").alias("s_lo"), F.max("l_suppkey").alias("s_hi"),
@@ -1778,7 +1728,7 @@ def sink_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         bit_s = F.shiftright(sx, i).bitwiseAND(F.lit(1))
         morton = morton + F.shiftleft(bit_p, 2 * i) + F.shiftleft(bit_s, 2 * i + 1)
 
-    out = str(Path(tempfile.mkdtemp(prefix="sink_zorder_", dir=_SINK_ROOT)) / "lineitem_z")
+    out = str(Path(tempfile.mkdtemp(prefix="sink_zorder_", dir=sink_root())) / "lineitem_z")
     (
         li.withColumn("_z", morton)
         .repartitionByRange(8, "_z")
@@ -1870,7 +1820,7 @@ def sink_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline republishes one day of a years-deep mart without
     rewriting (or locking) the other thousand partitions. The conf is
     set per-write via option(), not session-wide."""
-    out = str(_SINK_ROOT / "sink_partition_overwrite")
+    out = str(sink_root() / "sink_partition_overwrite")
     o = load_table(spark, sf_dir, "orders").select(
         F.year("o_orderdate").cast("int").alias("order_year"),
         "o_orderkey",

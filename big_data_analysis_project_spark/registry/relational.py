@@ -12,9 +12,6 @@ Conventions shared with the oracles (FIXTURES.md §B):
 
 from __future__ import annotations
 
-import atexit
-import shutil
-import tempfile
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -29,18 +26,9 @@ from ..plans.flagship import FLAGSHIP_ORACLE_SQL, revenue_by_nation
 from ..sources.readers import load_events, load_table, read_csv
 from ..sources.synthetic import _BASE_RATES, _POPULATIONS
 
-from ._base import KEY_ARTIFACTS, local_values_df, make_registry
+from ._base import KEY_ARTIFACTS, local_values_df, make_registry, sink_root
 
 QUERIES, ORACLE, q = make_registry()
-
-
-# per-process sink root: unique dir so concurrently-running harness
-# processes never race on the same output paths (VERDICT r1
-# housekeeping); within one process the keys are deterministic
-_SINK_ROOT = Path(tempfile.mkdtemp(prefix="bdap_sinks_"))
-# reclaim the sink scratch dir (full mart copies) at interpreter exit
-# so repeated bench/test cycles don't accumulate /tmp usage
-atexit.register(shutil.rmtree, _SINK_ROOT, ignore_errors=True)
 
 
 # --- flagship ----------------------------------------------------------
@@ -60,7 +48,7 @@ def scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1/S6 round-trip: parquet -> headered CSV -> schema'd CSV scan.
     ref: tb_data_collection.py:53-126 (CSV source), spark_data_processor.py:638-651 (sink).
     """
-    out = str(_SINK_ROOT / "scan_csv")
+    out = str(sink_root() / "scan_csv")
     load_table(spark, sf_dir, "nation").write.mode("overwrite").option("header", "true").csv(out)
     return read_csv(spark, out, schema="n_nationkey int, n_name string, n_regionkey int")
 
@@ -68,7 +56,7 @@ def scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
 @q("scan_json", "SELECT r_regionkey, r_name FROM region")
 def scan_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2/S3: JSON source with explicit schema. ref: tb_data_collection.py:128-233."""
-    out = str(_SINK_ROOT / "scan_json")
+    out = str(sink_root() / "scan_json")
     load_table(spark, sf_dir, "region").write.mode("overwrite").json(out)
     return spark.read.schema("r_regionkey int, r_name string").json(out)
 
@@ -76,7 +64,7 @@ def scan_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 @q("sink_parquet", "SELECT s_suppkey, s_name, s_nationkey, ROUND(s_acctbal, 2) AS acctbal FROM supplier")
 def sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S7: snappy parquet sink + re-scan. ref artifacts: data/processed/*.parquet."""
-    out = str(_SINK_ROOT / "sink_parquet")
+    out = str(sink_root() / "sink_parquet")
     (
         load_table(spark, sf_dir, "supplier")
         .select("s_suppkey", "s_name", "s_nationkey", F.round("s_acctbal", 2).alias("acctbal"))
@@ -92,7 +80,7 @@ def sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sink_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S6: CSV sink (distributed write, not toPandas). ref: spark_data_processor.py:638-651."""
-    out = str(_SINK_ROOT / "sink_csv")
+    out = str(sink_root() / "sink_csv")
     (
         load_table(spark, sf_dir, "customer")
         .select("c_custkey", "c_name", F.round("c_acctbal", 2).alias("acctbal"))
@@ -113,7 +101,7 @@ def sink_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     column-pruning story as parquet, relevant where the lake already
     standardized on ORC). Round-trips the same projection as
     sink_parquet so the two formats share one oracle shape."""
-    out = str(_SINK_ROOT / "sink_orc")
+    out = str(sink_root() / "sink_orc")
     (
         load_table(spark, sf_dir, "supplier")
         .select("s_suppkey", "s_name", "s_nationkey", F.round("s_acctbal", 2).alias("acctbal"))
@@ -133,7 +121,7 @@ def sink_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
     Distributed line-delimited write; the re-read pins an explicit
     schema, never inference (schema inference is a full extra pass at
     100 TB and type-unstable across batches)."""
-    out = str(_SINK_ROOT / "sink_jsonl")
+    out = str(sink_root() / "sink_jsonl")
     (
         load_table(spark, sf_dir, "customer")
         .select("c_custkey", "c_name", F.round("c_acctbal", 2).alias("acctbal"))
@@ -820,7 +808,7 @@ def scan_csv_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     ).collect()
-    out = _SINK_ROOT / "scan_csv_permissive"
+    out = sink_root() / "scan_csv_permissive"
     out.mkdir(parents=True, exist_ok=True)
     lines = [f"{r.n_nationkey},{r.n_name},{r.n_regionkey}" for r in rows]
     lines.insert(3, "999,TOOFEW")  # wrong arity
@@ -1051,7 +1039,7 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sinks import make_jsonl_sink_datasource
 
     spark.dataSource.register(make_jsonl_sink_datasource())
-    out = str(_SINK_ROOT / "sink_python_datasource")
+    out = str(sink_root() / "sink_python_datasource")
     # the custom sink only implements append; per-run isolation is the
     # caller's job (the sf0.01 run's files otherwise pollute sf0.1's)
     shutil.rmtree(out, ignore_errors=True)

@@ -20,8 +20,9 @@ Every file-backed stream key is a transform handed to ``run_stream``,
 which owns the rest of the drain:
 
 * staging — ``source`` is a table name, whose part files are
-  symlinked flat into a per-call stage (events read through the one
-  raw schema and ``normalize_events_ts``), or a list of batch frames,
+  symlinked (or, off the local file system, copied) flat into a
+  per-call stage (events read through the one raw schema and
+  ``normalize_events_ts``), or a list of batch frames,
   each written as one file with an ascending mtime and replayed one
   file per micro-batch;
 * reading — ``query(read)`` gets a ``read()`` that returns a fresh
@@ -33,7 +34,7 @@ which owns the rest of the drain:
   count from ``_stream_partitions`` (both set in ``_start``);
 * cleanup — the stage is deleted once the drain ends. Only outputs
   read lazily after the call (the foreachBatch mart, the incremental
-  mart) keep an exit-time cleanup.
+  mart) live on, under the exit-cleaned ``sink_root()``.
 
 Drains run in the caller's session, not in ``spark.newSession()``: a
 new session's memory-sink view raises AnalysisException from the
@@ -49,8 +50,6 @@ never ends, so it cannot drain under availableNow.
 
 from __future__ import annotations
 
-import atexit
-import json
 import os
 import shutil
 import tempfile
@@ -67,8 +66,17 @@ from ..sources.readers import (
     load_table,
     normalize_events_ts,
 )
+from ..sources.snapshot import (
+    copy_to_local,
+    footer_bounds,
+    footer_rows,
+    local_dir,
+    parquet_files,
+    table_bytes,
+    table_path,
+)
 
-from ._base import ScaleRefusal, make_registry
+from ._base import ScaleRefusal, make_registry, sink_root
 from ._memo import register_cache
 
 QUERIES, ORACLE, q = make_registry()
@@ -109,17 +117,10 @@ def _stream_partitions(
     cores = spark.sparkContext.defaultParallelism
     if kernel_parallel:
         return max(2, min(cores, 16))
-    nbytes = 0
     try:
-        p = Path(sf_dir) / f"{table}.parquet"
-        if p.is_dir():
-            nbytes = sum(
-                f.stat().st_size for f in p.rglob("*.parquet") if f.is_file()
-            )
-        elif p.exists():
-            nbytes = p.stat().st_size
+        nbytes = table_bytes(spark, sf_dir, table)
     except OSError:
-        pass  # unreadable source: fall through to the floor
+        nbytes = 0  # unreadable source: fall through to the floor
     return max(2, min(cores, -(-nbytes // _STATE_PARTITION_TARGET_BYTES)))
 
 
@@ -165,33 +166,33 @@ def _events_schema(spark: SparkSession, sf_dir: str) -> str:
     )
 
 
-def _stage_table_files(stage, sf_dir: str, table: str) -> None:
-    """Symlink a parquet table's data file(s) flat into a staging dir.
-    A parquet TABLE is a directory of part files, and FileStreamSource
-    does not recurse into subdirectories — a directory symlink would
-    silently match ZERO files. Flat part links are also the honest
-    layout: a production arrival directory receives files, not table
-    directories."""
-    # resolve() before linking: a RELATIVE sf_dir would otherwise be
-    # stored verbatim as the link target and re-resolved against the
-    # staging dir, leaving every link dangling and the stream empty
-    src = (Path(sf_dir) / f"{table}.parquet").resolve()
-    if src.is_dir():
-        # rglob, not glob: a PARTITIONED table nests part files under
-        # key=value subdirectories, where a top-level *.parquet glob
-        # matches nothing. Flat links drop directory-encoded partition
-        # VALUES; callers stage plain tables, and the raise below makes
-        # any empty staging loud.
-        parts = sorted(p for p in src.rglob("*.parquet") if p.is_file())
-        if not parts:
-            raise ValueError(
-                f"no parquet part files found under {src} — staging "
-                "would silently stream zero rows"
-            )
-        for i, part in enumerate(parts):
-            os.symlink(part, Path(stage) / f"part-{i:05d}.parquet")
-    else:
-        os.symlink(src, Path(stage) / f"{table}.parquet")
+def _stage_table_files(stage, sf_dir: str, table: str, spark=None) -> None:
+    """Put a parquet table's data file(s) flat into a staging dir:
+    local files as symlinks, others (any non-``file`` URI) copied
+    through Hadoop. A parquet TABLE is a directory of part files, and
+    FileStreamSource does not recurse into subdirectories — a
+    directory symlink would silently match ZERO files. Flat part files
+    are also the honest layout: a production arrival directory
+    receives files, not table directories. Flat names drop
+    directory-encoded partition VALUES; callers stage plain tables.
+    ``spark`` is needed only for a non-local table."""
+    src = table_path(sf_dir, table)
+    files = parquet_files(spark, src)
+    if not files:
+        raise ValueError(
+            f"no parquet files found at {src} — staging would silently "
+            "stream zero rows"
+        )
+    local = local_dir(src)
+    for i, (name, _, _) in enumerate(files):
+        dst = Path(stage) / f"part-{i:05d}.parquet"
+        if local is None:
+            copy_to_local(spark, src, name, dst)
+        else:
+            # resolve(): a RELATIVE sf_dir would otherwise be stored
+            # verbatim as the link target and re-resolved against the
+            # staging dir, leaving every link dangling
+            os.symlink((local / name).resolve(), dst)
 
 
 def _stage_batches(stage: Path, frames: list[DataFrame]):
@@ -246,7 +247,7 @@ def run_stream(
     stage = Path(tempfile.mkdtemp(prefix=f"{name}_"))
     try:
         if isinstance(source, str):
-            _stage_table_files(stage, sf_dir, source)
+            _stage_table_files(stage, sf_dir, source, spark)
             table = source
             if source == "events":
                 schema = _events_schema(spark, sf_dir)
@@ -279,97 +280,18 @@ def run_stream(
     return spark.table(name) if sink is None else None
 
 
-# session time zones under which a local (isAdjustedToUTC=false)
-# timestamp reads back as its raw value
-_UTC_ZONES = ("UTC", "Etc/UTC", "GMT", "Z", "+00:00")
-
-
-def _events_ts_bounds_us(sf_dir: str, tz: str = "UTC") -> tuple[int, int] | None:
-    """Exact (min, max) of ``unix_micros(ts)`` over the normalized
-    events, as a session in time zone ``tz`` reads them, from the
-    parquet FOOTER statistics — a pure-metadata pass over row-group
-    headers, no data read (the same table-statistics discipline
-    ``sink_zorder``'s ``_parquet_int_bounds`` follows). INT64 timestamp
-    statistics are exact (no truncation):
-
-    * ``timestamp[us]``: a UTC-adjusted column's physical INT64 IS unix
-      micros. A local (NTZ) column is read as wall-clock time in the
-      session zone, so its raw value is the answer only under UTC;
-      under any other zone this returns None;
-    * ``TIMESTAMP(NANOS)`` (read as bigint): physical nanos
-      floor-divide to micros exactly like ``normalize_events_ts``'s
-      ``ts div 1000`` (values are post-1970 — guarded below — so
-      floor == Spark's truncating ``div``), in any zone.
-
-    Returns None — caller falls back to the aggregation — when any
-    row group lacks stats, the unit is unrecognized, a value is
-    pre-epoch, the zone would shift the values, or the footer is
-    unreadable. min/max statistics ignore nulls, exactly as the
-    MIN/MAX aggregation does."""
-    import pyarrow.parquet as pq
-
-    src = Path(sf_dir) / "events.parquet"
-    if src.is_dir():
-        files = sorted(p for p in src.rglob("*.parquet") if p.is_file())
-    elif src.exists():
-        files = [src]
-    else:
-        return None
-    if not files:
-        return None
-    lo: int | None = None
-    hi: int | None = None
-    try:
-        for f in files:
-            md = pq.ParquetFile(f).metadata
-            if not md.num_row_groups:
-                continue
-            names = {
-                md.row_group(0).column(i).path_in_schema: i
-                for i in range(md.num_columns)
-            }
-            if "ts" not in names:
-                return None
-            for rg in range(md.num_row_groups):
-                g = md.row_group(rg)
-                if g.num_rows == 0:
-                    continue
-                st = g.column(names["ts"]).statistics
-                if st is None or not st.has_min_max:
-                    return None
-                meta = json.loads(st.logical_type.to_json())
-                unit = meta.get("timeUnit")
-                a, b = int(st.min_raw), int(st.max_raw)
-                if a < 0:
-                    return None  # pre-epoch: floor vs div diverge
-                if unit == "nanoseconds":
-                    a, b = a // 1000, b // 1000
-                elif unit != "microseconds":
-                    return None
-                elif not meta.get("isAdjustedToUTC") and tz not in _UTC_ZONES:
-                    return None
-                lo = a if lo is None else min(lo, a)
-                hi = b if hi is None else max(hi, b)
-    except Exception:  # noqa: BLE001 — stats are an optimization, never fatal
-        return None
-    if lo is None or hi is None:
-        return None
-    return lo, hi
-
-
 def _ts_bounds(spark: SparkSession, sf_dir: str, ev: DataFrame) -> tuple:
     """(min, max) of ``unix_micros(ts)`` over the normalized events
     frame ``ev``: from the footer when it gives them exactly in this
     session's time zone, else one MIN/MAX aggregation (None, None on an
     empty table). At 100 TB the aggregation is a full corpus scan."""
-    tz = spark.conf.get("spark.sql.session.timeZone")
-    bounds = _events_ts_bounds_us(sf_dir, tz)
-    if bounds is None:
-        row = ev.select(
-            F.unix_micros(F.min("ts")), F.unix_micros(F.max("ts"))
-        ).collect()[0]
-        bounds = (row[0], row[1])
-    return bounds
+    stats = footer_bounds(spark, sf_dir, "events", ("ts",))
+    if stats is not None:
+        return stats["ts"]
+    row = ev.select(
+        F.unix_micros(F.min("ts")), F.unix_micros(F.max("ts"))
+    ).collect()[0]
+    return row[0], row[1]
 
 
 def _hourly(ev: DataFrame, cents: bool = False) -> DataFrame:
@@ -1201,8 +1123,7 @@ def stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     the real files. Final mart equals the batch ``window_tumbling``
     output row-for-row (tests/test_recall.py)."""
     # the returned frame reads the mart lazily, so it lives until exit
-    mart = Path(tempfile.mkdtemp(prefix="bdap_stream_feb_mart_"))
-    atexit.register(shutil.rmtree, mart, ignore_errors=True)
+    mart = Path(tempfile.mkdtemp(prefix="stream_feb_mart_", dir=sink_root()))
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
@@ -1249,12 +1170,9 @@ def incremental_hourly_runs(spark: SparkSession, sf_dir: str):
     can assert coverage. total_value sums exact integer cents (see
     ``_hourly``).
     """
-    import pyarrow.parquet as pq
-
     raw_schema = _events_schema(spark, sf_dir)
     # the returned frame reads the mart lazily, so it lives until exit
-    root = Path(tempfile.mkdtemp(prefix="bdap_incremental_"))
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    root = Path(tempfile.mkdtemp(prefix="incremental_", dir=sink_root()))
     landing, ckpt, mart = root / "landing", root / "ckpt", root / "mart"
     landing.mkdir()
 
@@ -1272,11 +1190,8 @@ def incremental_hourly_runs(spark: SparkSession, sf_dir: str):
         .write.partitionBy("b")
         .parquet(str(split_root))
     )
-    batches = [split_root / f"b={i}" for i in (0, 1)]
-    batch_rows = [
-        sum(pq.ParquetFile(f).metadata.num_rows for f in sorted(b.glob("part-*.parquet")))
-        for b in batches
-    ]
+    batches = [sorted((split_root / f"b={i}").glob("part-*.parquet")) for i in (0, 1)]
+    batch_rows = [footer_rows(files) for files in batches]
 
     stream = normalize_events_ts(
         spark.readStream.schema(raw_schema).format("parquet").load(str(landing))
@@ -1296,9 +1211,9 @@ def incremental_hourly_runs(spark: SparkSession, sf_dir: str):
     parts = _stream_partitions(spark, sf_dir)
     stats = {"batch_rows": batch_rows, "run_input_rows": []}
     try:
-        for bdir in batches:
-            for f in bdir.glob("part-*"):
-                shutil.copy(f, landing / f"{bdir.name}-{f.name}")
+        for files in batches:
+            for f in files:
+                shutil.copy(f, landing / f"{f.parent.name}-{f.name}")
             query = _start(spark, writer, parts)
             stats["run_input_rows"].append(
                 int(sum(p["numInputRows"] for p in query.recentProgress))

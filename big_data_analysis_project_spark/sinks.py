@@ -23,6 +23,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .sources.snapshot import local_dir, parquet_files
+
 
 def _prepare(
     df: DataFrame,
@@ -68,22 +70,21 @@ def compact_parquet(
     full shuffle) rather than coalesce: coalesce(n) would also narrow
     the UPSTREAM computation to n tasks and can skew output sizes;
     here the shuffle IS the point — uniform target files."""
-    from pathlib import Path as _P
-
-    if _P(src).resolve() == _P(dst).resolve():
+    a, b = local_dir(src), local_dir(dst)
+    same = a.resolve() == b.resolve() if a and b else src.rstrip("/") == dst.rstrip("/")
+    if same:
         raise ValueError(
             "compact_parquet: src and dst must differ — overwriting the "
             "directory being read fails mid-write"
         )
     # recursive: a partitionBy layout nests part files under key=value
-    # subdirectories, which a flat glob would miss entirely (total=0
+    # subdirectories, which a flat listing would miss entirely (total=0
     # would then funnel everything into ONE file)
-    before = [p for p in _P(src).rglob("*.parquet")]
-    total = sum(p.stat().st_size for p in before)
+    before = parquet_files(spark, src)
+    total = sum(size for _, size, _ in before)
     n_out = max(1, -(-total // target_file_bytes))
     spark.read.parquet(src).repartition(n_out).write.mode("overwrite").parquet(dst)
-    after = [p for p in _P(dst).rglob("*.parquet")]
-    return len(before), len(after)
+    return len(before), len(parquet_files(spark, dst))
 
 
 def write_csv(

@@ -1,3 +1,3 @@
-from .readers import load_table, read_csv, read_json_records, load_all_tables
+from .readers import load_table, read_csv, read_json_records
 
-__all__ = ["load_table", "read_csv", "read_json_records", "load_all_tables"]
+__all__ = ["load_table", "read_csv", "read_json_records"]

@@ -70,12 +70,6 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_events_ts(raw)
 
 
-def load_all_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> dict[str, DataFrame]:
-    from ..schemas import TESTDATA_TABLES
-
-    return {n: load_table(spark, sf_dir, n) for n in (names or TESTDATA_TABLES)}
-
-
 def read_csv(
     spark: SparkSession,
     path: str,
@@ -105,13 +99,6 @@ def read_json_records(
     already-fetched records land directly in a typed DataFrame.
     """
     return spark.createDataFrame(records, schema=schema)
-
-
-def read_json_files(spark: SparkSession, path: str, schema: T.StructType | None = None) -> DataFrame:
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
 
 
 def read_jdbc(

@@ -1,17 +1,14 @@
-"""S4: synthetic long-format TB data generator, Spark-native.
+"""S4: synthetic TB data, Spark-native.
 
 The reference's fallback generator builds per-country rows in a Python
-loop with numpy noise (``tb_data_collection.py:251-318``). Here the
-same shape is declared as a cross-join of literal dimension frames plus
-deterministic column expressions — fully distributed, no driver loop,
-and reproducible (seeded ``rand``), so it scales to arbitrary
-country x year x indicator grids.
+loop with numpy noise (``tb_data_collection.py:251-318``). The
+``gen_synthetic`` registry key declares the same grid as a cross-join
+of literal dimension frames plus deterministic column expressions;
+this module holds the country profile it shares with the Python data
+sources below.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 # base incidence per 100k by iso3, mirroring the reference's hardcoded
 # country profile table (tb_data_collection.py:255-266 semantics)
@@ -40,51 +37,6 @@ _POPULATIONS = {
     "VNM": 97_300_000,
     "TLS": 1_300_000,
 }
-
-
-def generate_tb_long(
-    spark: SparkSession,
-    years: tuple[int, int] = (2018, 2023),
-    seed: int = 42,
-) -> DataFrame:
-    """Synthetic long fact table: one row per (country, year, indicator).
-
-    Counts derive from rate*population/1e5 with a mild downward yearly
-    trend and seeded multiplicative noise — the reference's generator
-    semantics (base rate x trend x gaussian noise) without the Python
-    row loop.
-    """
-    countries = spark.createDataFrame(
-        [(iso3, rate, float(_POPULATIONS[iso3])) for iso3, rate in _BASE_RATES.items()],
-        "iso3 string, base_rate double, population double",
-    )
-    yrs = spark.range(years[0], years[1] + 1).select(F.col("id").cast("int").alias("year"))
-
-    grid = countries.crossJoin(yrs)
-    # ~2%/year decline + +-10% seeded noise
-    trend = F.pow(F.lit(0.98), F.col("year") - F.lit(years[0]))
-    noise = F.lit(0.9) + F.rand(seed) * F.lit(0.2)
-    inc_100k = F.col("base_rate") * trend * noise
-    inc_num = inc_100k * F.col("population") / F.lit(100_000.0)
-    mort_100k = inc_100k * F.lit(0.12)
-    mort_num = inc_num * F.lit(0.12)
-
-    wide = grid.select(
-        "iso3",
-        "year",
-        F.round(inc_100k, 2).alias("e_inc_100k"),
-        F.round(inc_num, 0).alias("e_inc_num"),
-        F.round(mort_100k, 2).alias("e_mort_100k"),
-        F.round(mort_num, 0).alias("e_mort_num"),
-    )
-    # wide -> long via the unpivot operator the engine already owns (P2)
-    long = wide.melt(
-        ids=["iso3", "year"],
-        values=["e_inc_100k", "e_inc_num", "e_mort_100k", "e_mort_num"],
-        variableColumnName="indicator",
-        valueColumnName="value",
-    )
-    return long.withColumn("g_whoregion", F.lit("SEA"))
 
 
 # --- Python Data Source API (Spark 4) ----------------------------------

@@ -33,14 +33,18 @@ def test_env_int(monkeypatch, capsys, raw, want, warns):
 
 def test_registry_imports_with_typoed_sample_cap(tmp_path):
     """The driver sample cap is read at import time: a typo used to
-    make importing the registry raise ValueError."""
+    make importing the registry raise ValueError. The import also
+    creates no directory (the sink root is made on first use), seen
+    through an audit hook on os.mkdir."""
     env = dict(os.environ, SPARK_GRAFT_DRIVER_SAMPLE_CAP="lots", PYTHONPATH=str(REPO))
     proc = subprocess.run(
         [
             sys.executable,
             "-c",
+            "import sys; made = []; sys.addaudithook("
+            "lambda e, a: made.append(a[0]) if e == 'os.mkdir' else None); "
             "import big_data_analysis_project_spark.registry as R; "
-            "print(R.similarity_q._DRIVER_SAMPLE_CAP)",
+            "print(R.similarity_q._DRIVER_SAMPLE_CAP, made)",
         ],
         cwd=tmp_path,
         env=env,
@@ -49,7 +53,7 @@ def test_registry_imports_with_typoed_sample_cap(tmp_path):
         timeout=120,
     )
     assert proc.returncode == 0, proc.stderr
-    assert proc.stdout.strip() == "50000"
+    assert proc.stdout.strip() == "50000 []"
     assert "[env] SPARK_GRAFT_DRIVER_SAMPLE_CAP='lots'" in proc.stderr
 
 

@@ -11,9 +11,11 @@ from big_data_analysis_project_spark.registry._memo import (
     register_cache,
     release_snapshot,
     session_memo,
-    snapshot_fingerprint,
     snapshot_memo,
 )
+from big_data_analysis_project_spark.sources.snapshot import fingerprint
+
+from .conftest import viewfs_mount
 
 
 def _write_parquet(spark, path, n):
@@ -21,21 +23,24 @@ def _write_parquet(spark, path, n):
 
 
 def test_snapshot_memo_invalidates_on_rewrite(spark, tmp_path):
-    _write_parquet(spark, tmp_path, 5)
-    cache: dict = {}
-    builds = []
+    """Also through a Hadoop scheme, listed by Hadoop's FileSystem
+    rather than fingerprinted as a constant "missing"."""
+    for sf_dir in (str(tmp_path), viewfs_mount(spark, tmp_path)):
+        _write_parquet(spark, tmp_path, 5)
+        cache: dict = {}
+        builds = []
 
-    def build():
-        builds.append(1)
-        return len(builds)
+        def build():
+            builds.append(1)
+            return len(builds)
 
-    assert snapshot_memo(cache, spark, str(tmp_path), build) == 1
-    assert snapshot_memo(cache, spark, str(tmp_path), build) == 1  # cache hit
-    time.sleep(0.01)  # ensure mtime_ns moves even on coarse filesystems
-    _write_parquet(spark, tmp_path, 7)
-    assert snapshot_memo(cache, spark, str(tmp_path), build) == 2  # rebuilt
-    # stale-fingerprint entry evicted, not accumulated
-    assert len([k for k in cache if k[1][0] == str(tmp_path)]) == 1
+        assert snapshot_memo(cache, spark, sf_dir, build) == 1
+        assert snapshot_memo(cache, spark, sf_dir, build) == 1  # cache hit
+        time.sleep(0.01)  # ensure mtime_ns moves even on coarse filesystems
+        _write_parquet(spark, tmp_path, 7)
+        assert snapshot_memo(cache, spark, sf_dir, build) == 2  # rebuilt
+        # stale-fingerprint entry evicted, not accumulated
+        assert len([k for k in cache if k[1][0] == sf_dir]) == 1
 
 
 def test_snapshot_memo_extra_key_separates_models(spark, tmp_path):
@@ -111,8 +116,14 @@ def test_registry_caches_are_registered():
         ), f"{name} is not registered for release_snapshot"
 
 
-def test_snapshot_fingerprint_missing_dir():
-    assert snapshot_fingerprint("/nonexistent/path/xyz") == ("<missing>",)
+def test_snapshot_fingerprint_missing_dir(spark, tmp_path):
+    assert fingerprint(None, "/nonexistent/path/xyz") == ("<missing>",)
+    # an existing dir with no parquet file is empty, not missing, in
+    # every form
+    mount = viewfs_mount(spark, tmp_path)
+    assert fingerprint(spark, mount + "/nope") == ("<missing>",)
+    for path in (str(tmp_path), tmp_path.as_uri(), mount):
+        assert fingerprint(spark, path) == ()
 
 
 def test_session_memo_still_keyed_per_application(spark):

@@ -3,7 +3,6 @@ single-file CSV parity, JDBC gated on driver availability."""
 
 from __future__ import annotations
 
-import tempfile
 from pathlib import Path
 
 import pytest
@@ -22,8 +21,8 @@ def orders(spark):
     )
 
 
-def test_write_parquet_partitioned_prunes(spark, orders):
-    out = str(Path(tempfile.mkdtemp()) / "orders_parq")
+def test_write_parquet_partitioned_prunes(spark, orders, tmp_path):
+    out = str(tmp_path / "orders_parq")
     write_parquet(orders, out, partition_by=["year"], audit_col="updated_at")
     back = spark.read.parquet(out)
     assert back.count() == orders.count()
@@ -35,15 +34,15 @@ def test_write_parquet_partitioned_prunes(spark, orders):
     assert "PartitionFilters: [" in plan and "year" in plan.split("PartitionFilters")[1][:80]
 
 
-def test_write_parquet_upsert_keys(spark, orders):
-    out = str(Path(tempfile.mkdtemp()) / "orders_dedup")
+def test_write_parquet_upsert_keys(spark, orders, tmp_path):
+    out = str(tmp_path / "orders_dedup")
     doubled = orders.union(orders)
     write_parquet(doubled, out, upsert_keys=["o_orderkey"])
     assert spark.read.parquet(out).count() == orders.count()
 
 
-def test_write_csv_single_file(spark, orders):
-    out = Path(tempfile.mkdtemp()) / "orders_csv"
+def test_write_csv_single_file(spark, orders, tmp_path):
+    out = tmp_path / "orders_csv"
     write_csv(orders.limit(50), str(out), single_file=True)
     parts = list(out.glob("part-*.csv"))
     assert len(parts) == 1, f"expected one CSV part file, got {parts}"
@@ -59,11 +58,11 @@ def _jdbc_driver_available(spark) -> bool:
         return False
 
 
-def test_write_jdbc_or_gate(spark, orders):
+def test_write_jdbc_or_gate(spark, orders, tmp_path):
     """With a driver jar: full write+read-back round trip. Without:
     the writer must surface the JVM's driver error, not silently
     no-op (the gate the docstring promises)."""
-    url = f"jdbc:sqlite:{Path(tempfile.mkdtemp()) / 'marts.db'}"
+    url = f"jdbc:sqlite:{tmp_path / 'marts.db'}"
     if _jdbc_driver_available(spark):
         write_jdbc(orders.limit(20), url, "orders_mart", audit_col=None)
         back = spark.read.format("jdbc").option("url", url).option("dbtable", "orders_mart").load()
@@ -89,12 +88,11 @@ def test_bucketed_join_has_no_shuffle(spark):
     assert df.count() > 0
 
 
-def test_compact_parquet_reduces_files(spark, orders):
+def test_compact_parquet_reduces_files(spark, orders, tmp_path):
     from big_data_analysis_project_spark.sinks import compact_parquet
 
-    root = Path(tempfile.mkdtemp())
-    frag = str(root / "frag")
-    out = str(root / "compact")
+    frag = str(tmp_path / "frag")
+    out = str(tmp_path / "compact")
     orders.repartition(32).write.mode("overwrite").parquet(frag)
     before, after = compact_parquet(spark, frag, out)
     assert before == 32
@@ -103,6 +101,8 @@ def test_compact_parquet_reduces_files(spark, orders):
     back = spark.read.parquet(out)
     assert back.count() == orders.count()
     assert sorted(back.columns) == sorted(orders.columns)
+    # the same source given as a file: URI lists the same files
+    assert compact_parquet(spark, Path(frag).as_uri(), str(tmp_path / "c2")) == (32, 1)
 
 
 def test_sink_zorder_prunes_both_dimensions(spark):
@@ -199,8 +199,8 @@ def test_per_call_sink_copies_live_under_the_sink_root(spark, key):
     module's sink root, which is deleted at exit, not as a bare temp
     dir that outlives the process."""
     from big_data_analysis_project_spark.registry import QUERIES
-    from big_data_analysis_project_spark.registry.extended_q import _SINK_ROOT
+    from big_data_analysis_project_spark.registry._base import sink_root
 
     files = QUERIES[key](spark, SF_SMOKE).inputFiles()
-    root = _SINK_ROOT.resolve().as_uri()
+    root = sink_root().resolve().as_uri()
     assert files and all(f.startswith(root + "/") for f in files), files

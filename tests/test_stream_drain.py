@@ -15,11 +15,11 @@ from pyspark.sql import functions as F
 
 from big_data_analysis_project_spark.registry import QUERIES
 from big_data_analysis_project_spark.registry.streaming_q import (
-    _events_ts_bounds_us,
     _stream_partitions,
     _ts_bounds,
 )
 from big_data_analysis_project_spark.sources.readers import load_events
+from big_data_analysis_project_spark.sources.snapshot import footer_bounds
 
 from .conftest import SF_CORRECT, SF_SMOKE
 
@@ -118,7 +118,7 @@ def test_outer_join_is_time_zone_independent(spark):
     runtime-set time zone, so the zone is set on it directly."""
     ny = spark.newSession()
     ny.conf.set("spark.sql.session.timeZone", "America/New_York")
-    assert _events_ts_bounds_us(SF_CORRECT, "America/New_York") is None
+    assert footer_bounds(ny, SF_CORRECT, "events", ("ts",)) is None
     row = (
         load_events(ny, SF_CORRECT)
         .select(F.unix_micros(F.min("ts")), F.unix_micros(F.max("ts")))

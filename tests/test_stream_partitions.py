@@ -88,16 +88,16 @@ def test_typoed_env_override_falls_back(tmp_path, monkeypatch):
 
 
 def test_ts_bounds_footer_equals_aggregation(spark):
+    """Also the integer columns sink_zorder buckets on, and the
+    aggregation fallback for a corpus off the local file system."""
     from pyspark.sql import functions as F
 
-    from big_data_analysis_project_spark.registry.streaming_q import (
-        _events_ts_bounds_us,
-    )
-    from big_data_analysis_project_spark.sources.readers import load_events
+    from big_data_analysis_project_spark.sources.snapshot import footer_bounds
+    from big_data_analysis_project_spark.sources.readers import load_events, load_table
 
-    from .conftest import SF_SMOKE
+    from .conftest import SF_SMOKE, viewfs_mount
 
-    got = _events_ts_bounds_us(SF_SMOKE)
+    got = footer_bounds(spark, SF_SMOKE, "events", ("ts",))["ts"]
     b = (
         load_events(spark, SF_SMOKE)
         .select(
@@ -107,6 +107,13 @@ def test_ts_bounds_footer_equals_aggregation(spark):
         .collect()[0]
     )
     assert got == (b.lo, b.hi)
+    cols = ("l_partkey", "l_suppkey")
+    b = load_table(spark, SF_SMOKE, "lineitem").select(
+        *(f(c) for c in cols for f in (F.min, F.max))
+    ).collect()[0]
+    got = footer_bounds(spark, SF_SMOKE, "lineitem", cols)
+    assert got == {"l_partkey": (b[0], b[1]), "l_suppkey": (b[2], b[3])}
+    assert footer_bounds(spark, viewfs_mount(spark, SF_SMOKE), "lineitem", cols) is None
 
 
 def test_ts_bounds_nanos_encoding_floors_to_micros(spark, tmp_path):
@@ -117,9 +124,7 @@ def test_ts_bounds_nanos_encoding_floors_to_micros(spark, tmp_path):
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
-    from big_data_analysis_project_spark.registry.streaming_q import (
-        _events_ts_bounds_us,
-    )
+    from big_data_analysis_project_spark.sources.snapshot import footer_bounds
     from big_data_analysis_project_spark.sources.readers import load_events
 
     ns = [1_704_067_200_123_456_789, 1_704_067_200_123_457_999, 1_706_000_000_000_000_001]
@@ -134,7 +139,7 @@ def test_ts_bounds_nanos_encoding_floors_to_micros(spark, tmp_path):
         }
     )
     pq.write_table(tbl, tmp_path / "events.parquet")
-    got = _events_ts_bounds_us(str(tmp_path))
+    got = footer_bounds(spark, str(tmp_path), "events", ("ts",))["ts"]
     assert got == (min(ns) // 1000, max(ns) // 1000)
     b = (
         load_events(spark, str(tmp_path))
@@ -147,24 +152,29 @@ def test_ts_bounds_nanos_encoding_floors_to_micros(spark, tmp_path):
     assert got == (b.lo, b.hi)
 
 
-def test_ts_bounds_fallback_paths(tmp_path):
-    """No stats / no file / non-timestamp unit all return None so the
+def test_ts_bounds_fallback_paths(spark, tmp_path):
+    """No stats / no file / pre-epoch values all return None so the
     caller's aggregation fallback fires instead of a wrong bound."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from big_data_analysis_project_spark.registry.streaming_q import (
-        _events_ts_bounds_us,
-    )
+    from big_data_analysis_project_spark.sources.snapshot import footer_bounds
+
+    def bounds():
+        return footer_bounds(spark, str(tmp_path), "events", ("ts",))
 
     # missing table
-    assert _events_ts_bounds_us(str(tmp_path)) is None
+    assert bounds() is None
     # statistics disabled at write time
     tbl = pa.table({"ts": pa.array([1, 2, 3], pa.timestamp("us"))})
     pq.write_table(
         tbl, tmp_path / "events.parquet", write_statistics=False
     )
-    assert _events_ts_bounds_us(str(tmp_path)) is None
+    assert bounds() is None
+    # pre-epoch nanos: floor and Spark's truncating div diverge
+    tbl = pa.table({"ts": pa.array([-1_500, 2_000], pa.timestamp("ns"))})
+    pq.write_table(tbl, tmp_path / "events.parquet")
+    assert bounds() is None
 
 
 def test_ts_bounds_match_pyspark_datetime_roundtrip(spark):
@@ -175,14 +185,12 @@ def test_ts_bounds_match_pyspark_datetime_roundtrip(spark):
 
     from pyspark.sql import functions as F
 
-    from big_data_analysis_project_spark.registry.streaming_q import (
-        _events_ts_bounds_us,
-    )
+    from big_data_analysis_project_spark.sources.snapshot import footer_bounds
     from big_data_analysis_project_spark.sources.readers import load_events
 
     from .conftest import SF_SMOKE
 
-    hi_us = _events_ts_bounds_us(SF_SMOKE)[1]
+    hi_us = footer_bounds(spark, SF_SMOKE, "events", ("ts",))["ts"][1]
     m_footer = datetime.fromtimestamp(hi_us // 1_000_000).replace(
         microsecond=hi_us % 1_000_000
     )
