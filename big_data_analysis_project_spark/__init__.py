@@ -13,7 +13,8 @@ Layout:
     sources/      readers (csv/json/parquet/jdbc-gated) + synthetic generator
     sinks.py      parquet/csv/jdbc writers (partitioning, upsert keys, audit)
     operators/    cleaning, reshape, joins, aggregates, windows, graphs (CC)
-    functions/    rate derivation (decimal parity)
+    functions/    rate derivation (decimal parity), text tokenization rules
+                  (Spark/Python/DuckDB dialects), multimodal decode
     plans/        end-to-end pipelines (flagship, TB golden pipeline)
     registry/     every query key + DuckDB oracle the driver checks:
                   relational, pipeline, serving, text, dedup (exact/

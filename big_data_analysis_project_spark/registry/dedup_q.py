@@ -36,6 +36,7 @@ import warnings
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import py_ws_split, shingle_set, sql_ws_split, ws_split
 from ..operators.graphs import connected_components
 from ..session import env_int
 from ..sources.readers import load_table
@@ -95,31 +96,10 @@ def _shingles(docs: DataFrame) -> DataFrame:
     through interpreted array expressions and measured ~3.7s at sf0.1
     where this kernel is sub-second.
 
-    Engine parity is bit-exact with the DuckDB oracle's
-    ``string_split_regex(lower(trim(text, ' ')), '[ \\t\\n\\x0B\\f\\r]+')``: trim strips
-    SPACES only, the split class is the EXPLICIT ASCII set
-    ``[ \\t\\n\\x0B\\f\\r]`` (Java regex ``\\s``'s membership, spelled out
-    because Python's unicode ``\\s`` would also eat \\x1c-\\x1f and NEL),
-    and EMPTY tokens from leading/trailing separators are KEPT —
-    Python re.split, Spark's F.split (limit -1), and DuckDB's
-    string_split_regex all agree on that, so text ending in \\n
-    tokenizes identically on every path (an earlier revision popped
-    trailing empties "Java-style", which silently diverged from both
-    engines on trailing-whitespace text).
-
-    Case-map caveat: lower() here is FULL unicode lowercasing, where
-    Python and Spark/Java agree with each other but DuckDB's utf8proc
-    differs on two known classes — dotted 'İ' (→ 'i'+combining-dot vs
-    plain 'i') and Greek final sigma (context-sensitive vs not). The
-    engine and its kernels are self-consistent; only the DuckDB
-    oracle can diverge, and only on those classes, which the corpus
-    contract excludes. (The stopword/langid family, whose token runs
-    those classes can SPLIT, uses the portable ASCII translate map
-    instead — see text_q._lower_ascii.)"""
+    Tokens and shingles follow the lowered whitespace rule of
+    ``functions/text.py``, the same rule as the DuckDB oracle's
+    ``_SHINGLE_CTE``."""
     import pyarrow as pa
-    import re
-
-    ws = re.compile(r"[ \t\n\x0b\f\r]+")
 
     def kernel(batches):
         for batch in batches:
@@ -130,13 +110,7 @@ def _shingles(docs: DataFrame) -> DataFrame:
             for doc_id, txt in zip(ids, texts):
                 if txt is None:
                     continue
-                toks = ws.split(txt.strip(" ").lower())
-                if len(toks) < NGRAM:
-                    continue
-                sh = dict.fromkeys(
-                    " ".join(t)
-                    for t in zip(*(toks[k:] for k in range(NGRAM)))
-                )
+                sh = shingle_set(py_ws_split(txt, lower=True), NGRAM)
                 out_ids.extend([doc_id] * len(sh))
                 out_sh.extend(sh)
             yield pa.RecordBatch.from_arrays(
@@ -149,15 +123,19 @@ def _shingles(docs: DataFrame) -> DataFrame:
     )
 
 
-_NGRAM_ORACLE = f"""
-WITH words AS (
-  SELECT doc_id, string_split_regex(lower(trim(text, ' ')), '[ \\t\\n\\x0B\\f\\r]+') AS w FROM documents
+# the DuckDB twin of ``_shingles``: sh(doc_id, s) holds each document's
+# distinct word-NGRAM shingles; every shingle oracle opens with it
+_SHINGLE_CTE = f"""WITH words AS (
+  SELECT doc_id, {sql_ws_split(lower=True)} AS w FROM documents
 ),
 sh AS (
   SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS s
   FROM words, LATERAL unnest(range(1, len(w) - {NGRAM - 2})) AS t(i)
   WHERE len(w) >= {NGRAM}
-),
+)"""
+
+_NGRAM_ORACLE = f"""
+{_SHINGLE_CTE},
 sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
 inter AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
@@ -485,14 +463,7 @@ def _ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 DF_CAP = 32
 
 _DFCAP_ORACLE = f"""
-WITH words AS (
-  SELECT doc_id, string_split_regex(lower(trim(text, ' ')), '[ \\t\\n\\x0B\\f\\r]+') AS w FROM documents
-),
-sh AS (
-  SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS s
-  FROM words, LATERAL unnest(range(1, len(w) - {NGRAM - 2})) AS t(i)
-  WHERE len(w) >= {NGRAM}
-),
+{_SHINGLE_CTE},
 sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
 rare AS (SELECT s FROM sh GROUP BY s HAVING COUNT(*) <= {DF_CAP}),
 inter AS (
@@ -588,14 +559,7 @@ def dedup_ngram_dfcap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _CONTAINMENT_DFCAP_ORACLE = f"""
-WITH words AS (
-  SELECT doc_id, string_split_regex(lower(trim(text, ' ')), '[ \\t\\n\\x0B\\f\\r]+') AS w FROM documents
-),
-sh AS (
-  SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS s
-  FROM words, LATERAL unnest(range(1, len(w) - {NGRAM - 2})) AS t(i)
-  WHERE len(w) >= {NGRAM}
-),
+{_SHINGLE_CTE},
 sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
 rare AS (SELECT s FROM sh GROUP BY s HAVING COUNT(*) <= {DF_CAP}),
 capped AS (SELECT doc_id, s FROM sh JOIN rare USING (s)),
@@ -647,15 +611,14 @@ def dedup_containment_dfcap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the int64-exact pairs_bound (ADVICE r7) — is hash-verified against
 # DuckDB. p99_df stays internal-only: percentile_approx is not
 # portably exact across engines, and the refusal logic never uses it.
-_DF_AUDIT_ORACLE = (
-    _NGRAM_ORACLE.split("sizes AS")[0]
-    + """df AS (SELECT s, COUNT(*) AS df FROM sh GROUP BY s)
+_DF_AUDIT_ORACLE = f"""
+{_SHINGLE_CTE},
+df AS (SELECT s, COUNT(*) AS df FROM sh GROUP BY s)
 SELECT CAST(COUNT(*) AS BIGINT) AS n_shingles,
        CAST(MAX(df) AS BIGINT) AS max_df,
        CAST(SUM(df * (df - 1)) // 2 AS BIGINT) AS pairs_bound
 FROM df
 """
-)
 
 
 @q("shingle_df_audit", _DF_AUDIT_ORACLE, artifacts={"shingles"})
@@ -702,10 +665,8 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
     over the exploded shingle frame — this kernel is sub-second)."""
     import numpy as np
     import pyarrow as pa
-    import re
     import zlib
 
-    ws = re.compile(r"[ \t\n\x0b\f\r]+")
     a_np = np.asarray([a for a, _ in _PERMS], dtype=np.int64)  # (perms,)
     b_np = np.asarray([b for _, b in _PERMS], dtype=np.int64)
 
@@ -718,12 +679,9 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
             for r, txt in enumerate(texts):
                 if txt is None:
                     continue
-                toks = ws.split(txt.strip(" ").lower())
-                if len(toks) < NGRAM:
+                sh = shingle_set(py_ws_split(txt, lower=True), NGRAM)
+                if not sh:
                     continue
-                sh = dict.fromkeys(
-                    " ".join(t) for t in zip(*(toks[k:] for k in range(NGRAM)))
-                )
                 hs = np.fromiter(
                     (zlib.crc32(s.encode("utf-8")) % _PRIME for s in sh),
                     dtype=np.int64,
@@ -921,11 +879,9 @@ def simhash_fingerprints(docs: DataFrame, bits: int = 64) -> DataFrame:
     keep the long positive, matching the banding's chunk math."""
     import numpy as np
     import pyarrow as pa
-    import re
     import zlib
     from collections import Counter
 
-    ws = re.compile(r"[ \t\n\x0B\f\r]+")
     shifts = np.arange(bits, dtype=np.uint64)
     powers = (np.uint64(1) << shifts).astype(np.uint64)
     powers[bits - 1] = 0  # bit 63 left clear: keep the long positive
@@ -943,9 +899,7 @@ def simhash_fingerprints(docs: DataFrame, bits: int = 64) -> DataFrame:
             for r, txt in enumerate(texts):
                 if not txt:
                     continue
-                # strip ' ' only — same edge-trim class as the shingle
-                # and minhash kernels (unicode .strip() would eat NBSP)
-                counts = Counter(t for t in ws.split(txt.strip(" ").lower()) if t)
+                counts = Counter(t for t in py_ws_split(txt, lower=True) if t)
                 if not counts:
                     continue
                 emitted[r] = True
@@ -1615,14 +1569,7 @@ def dedup_mllib_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _INCREMENTAL_ORACLE = f"""
-WITH words AS (
-  SELECT doc_id, string_split_regex(lower(trim(text, ' ')), '[ \\t\\n\\x0B\\f\\r]+') AS w FROM documents
-),
-sh AS (
-  SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS s
-  FROM words, LATERAL unnest(range(1, len(w) - {NGRAM - 2})) AS t(i)
-  WHERE len(w) >= {NGRAM}
-),
+{_SHINGLE_CTE},
 sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
 inter AS (
   SELECT d.doc_id AS new_doc, b.doc_id AS dup_of, COUNT(*) AS n_common
@@ -1649,14 +1596,7 @@ WHERE CAST(n_common AS DOUBLE) / (sa.n + sb.n - n_common) >= {JACCARD_THRESHOLD}
 # sum over SHARED shingles of n_delta(s) * n_base(s): the exact
 # pre-aggregation row count of the delta-probes-base join.
 _INCREMENTAL_AUDIT_ORACLE = f"""
-WITH words AS (
-  SELECT doc_id, string_split_regex(lower(trim(text, ' ')), '[ \\t\\n\\x0B\\f\\r]+') AS w FROM documents
-),
-sh AS (
-  SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS s
-  FROM words, LATERAL unnest(range(1, len(w) - {NGRAM - 2})) AS t(i)
-  WHERE len(w) >= {NGRAM}
-),
+{_SHINGLE_CTE},
 split AS (
   SELECT s,
          CAST(SUM(CASE WHEN doc_id % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_delta,
@@ -1845,14 +1785,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _INCREMENTAL_DFCAP_ORACLE = f"""
-WITH words AS (
-  SELECT doc_id, string_split_regex(lower(trim(text, ' ')), '[ \\t\\n\\x0B\\f\\r]+') AS w FROM documents
-),
-sh AS (
-  SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS s
-  FROM words, LATERAL unnest(range(1, len(w) - {NGRAM - 2})) AS t(i)
-  WHERE len(w) >= {NGRAM}
-),
+{_SHINGLE_CTE},
 sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
 rare AS (SELECT s FROM sh GROUP BY s HAVING COUNT(*) <= {DF_CAP}),
 capped AS (SELECT doc_id, s FROM sh JOIN rare USING (s)),
@@ -2006,7 +1939,7 @@ SPAN_W = 8
 
 _SPANS_ORACLE = f"""
     WITH t AS (SELECT doc_id,
-                      string_split_regex(lower(trim(text, ' ')), '[ \\t\\n\\x0B\\f\\r]+') AS toks
+                      {sql_ws_split(lower=True)} AS toks
                FROM documents),
     w AS (SELECT DISTINCT doc_id,
                  array_to_string(toks[i:i+{SPAN_W - 1}], ' ') AS span
@@ -2040,7 +1973,7 @@ def dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     span TEXT; counts agree absent 64-bit collisions (~1e-10 at 1e4
     spans), the same contract as ``dedup_exact``'s md5 key."""
     d = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.split(F.lower(F.trim("text")), r"[ \t\n\x0B\f\r]+").alias("toks")
+        "doc_id", ws_split("text", lower=True).alias("toks")
     )
     windows = F.expr(
         f"CASE WHEN size(toks) >= {SPAN_W} THEN "

@@ -19,6 +19,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import sql_ws_split, ws_split
 from ..sources.readers import load_events, load_table
 from ..sources.snapshot import footer_bounds
 from .dedup_q import _NGRAM_ORACLE as _NGRAM_PAIR_SQL
@@ -497,8 +498,8 @@ def anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @q(
     "text_term_stats",
-    """WITH tok AS (
-         SELECT doc_id, unnest(string_split_regex(lower(trim(text, ' ')), '[ \\t\\n\\x0B\\f\\r]+')) AS term
+    f"""WITH tok AS (
+         SELECT doc_id, unnest({sql_ws_split(lower=True)}) AS term
          FROM documents
        )
        SELECT term,
@@ -515,7 +516,7 @@ def text_term_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     One explode + one shuffle keyed on the term."""
     d = load_table(spark, sf_dir, "documents")
     tok = d.select(
-        "doc_id", F.explode(F.split(F.lower(F.trim("text")), "[ \\t\\n\\x0B\\f\\r]+")).alias("term")
+        "doc_id", F.explode(ws_split("text", lower=True)).alias("term")
     ).filter(F.col("term") != "")
     return (
         tok.groupBy("term")

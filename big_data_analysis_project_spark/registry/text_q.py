@@ -3,9 +3,9 @@ north-star extensions): token counting, quality scoring, language-ID
 heuristic, document fingerprinting.
 
 All JVM-side built-ins (split/regexp/md5/aggregate) — no Python UDFs —
-so each is a narrow single-pass map that scales linearly. Regex
-patterns are chosen to mean the same thing in Java regex (Spark) and
-RE2 (DuckDB) so the oracles are exact.
+so each is a narrow single-pass map that scales linearly. The
+whitespace and ASCII-word token rules, and why they read the same in
+Java regex (Spark) and RE2 (DuckDB), are in ``functions/text.py``.
 """
 
 from __future__ import annotations
@@ -13,6 +13,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import (
+    STOPWORDS,
+    WS_CLASS,
+    WS_RUN,
+    sql_word_hits,
+    sql_ws_count,
+    sql_ws_split,
+    word_hits,
+    word_split,
+    ws_count,
+    ws_split,
+)
 from ..sources.readers import load_table
 
 from ._base import make_registry
@@ -22,53 +34,12 @@ QUERIES, ORACLE, q = make_registry()
 
 # BPE-ish pre-tokenizer: letter runs | digit runs | single punctuation
 _BPE_RE = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"
-# ASCII-\b-equivalent word counting, spelled out because the engines
-# do NOT share a \b: Java's \b is unicode-aware even though its \w is
-# ASCII (so 'aß' has no boundary after 'a'), RE2's \b is the ASCII set
-# [A-Za-z0-9_], and Python's default \b/\w are fully unicode. Tokens =
-# maximal [a-z0-9_] runs after an ASCII-ONLY lowercase; counting set
-# membership is exactly counting \b-delimited hits under an ASCII \w,
-# the semantics all three can express identically. The lowercase is
-# translate(A-Z, a-z), NOT lower(): unicode case mapping itself
-# diverges — Spark/Java/Python map 'İ' to 'i'+combining-dot (2
-# codepoints, which then SPLITS a token run) while DuckDB's utf8proc
-# maps it to plain 'i', and Greek final sigma is context-sensitive in
-# one and not the other — so lower('İa') token-izes differently per
-# engine, and only the ASCII map is portable. Property-pinned in
-# tests/test_properties.py::test_stopword_boundary_parity_three_ways.
-_STOPWORDS = ("the", "a", "an", "and", "of", "to", "in", "is", "on", "for")
-_WORD_BREAK = "[^a-z0-9_]+"
-_ASCII_UP = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
-_ASCII_LO = "abcdefghijklmnopqrstuvwxyz"
-
-
-def _sql_word_hits(words: tuple[str, ...]) -> str:
-    """DuckDB expression counting ASCII-lowercased tokens of text in
-    ``words``."""
-    inlist = ", ".join(f"'{w}'" for w in words)
-    return (
-        f"len(list_filter(string_split_regex("
-        f"translate(text, '{_ASCII_UP}', '{_ASCII_LO}'), '{_WORD_BREAK}'), "
-        f"t -> t IN ({inlist})))"
-    )
-
-
-def _lower_ascii(col):
-    """ASCII-only lowercase — the portable case map (see block comment)."""
-    return F.translate(col, _ASCII_UP, _ASCII_LO)
-
-
-def _word_hits(col, words: tuple[str, ...]):
-    """Spark column counting ASCII-lowercased tokens of col in ``words``."""
-    return F.size(
-        F.filter(F.split(_lower_ascii(col), _WORD_BREAK), lambda t: t.isin(*words))
-    )
 
 
 @q(
     "text_tokens",
     f"""SELECT doc_id,
-              len(string_split_regex(trim(text, ' '), '[ \\t\\n\\x0B\\f\\r]+')) AS n_ws_tokens,
+              {sql_ws_count()} AS n_ws_tokens,
               len(regexp_extract_all(text, '{_BPE_RE}')) AS n_bpe_tokens
        FROM documents""",
 )
@@ -78,7 +49,7 @@ def text_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
-        F.size(F.split(F.trim("text"), "[ \\t\\n\\x0B\\f\\r]+")).alias("n_ws_tokens"),
+        ws_count("text").alias("n_ws_tokens"),
         F.size(F.regexp_extract_all("text", F.lit(_BPE_RE), 0)).alias("n_bpe_tokens"),
     )
 
@@ -87,18 +58,18 @@ def text_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_quality",
     f"""SELECT doc_id,
               length(text) AS n_chars_measured,
-              len(string_split_regex(trim(text, ' '), '[ \\t\\n\\x0B\\f\\r]+')) AS n_words,
+              {sql_ws_count()} AS n_words,
               ROUND(CAST(length(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS DOUBLE)
                     / length(text), 4) AS punct_ratio,
-              ROUND(CAST({_sql_word_hits(_STOPWORDS)} AS DOUBLE)
-                    / len(string_split_regex(trim(text, ' '), '[ \\t\\n\\x0B\\f\\r]+')), 4) AS stopword_ratio
+              ROUND(CAST({sql_word_hits(STOPWORDS)} AS DOUBLE)
+                    / {sql_ws_count()}, 4) AS stopword_ratio
        FROM documents WHERE length(text) > 0""",
 )
 def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality scoring: length, punctuation ratio, stopword ratio —
     the standard cheap pre-training quality filters."""
     d = load_table(spark, sf_dir, "documents").filter(F.length("text") > 0)
-    n_words = F.size(F.split(F.trim("text"), "[ \\t\\n\\x0B\\f\\r]+"))
+    n_words = ws_count("text")
     return d.select(
         "doc_id",
         F.length("text").alias("n_chars_measured"),
@@ -109,7 +80,7 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
             4,
         ).alias("punct_ratio"),
         F.round(
-            _word_hits(F.col("text"), _STOPWORDS).cast("double") / n_words,
+            word_hits(F.col("text"), STOPWORDS).cast("double") / n_words,
             4,
         ).alias("stopword_ratio"),
     )
@@ -127,12 +98,12 @@ _ES_WORDS = ("el", "la", "los", "y", "es")
     "text_langid",
     f"""SELECT doc_id,
               CASE
-                WHEN {_sql_word_hits(_EN_WORDS)} >=
-                     greatest({_sql_word_hits(_DE_WORDS)},
-                              {_sql_word_hits(_ES_WORDS)}, 1) THEN 'en'
-                WHEN {_sql_word_hits(_DE_WORDS)} >=
-                     greatest({_sql_word_hits(_ES_WORDS)}, 1) THEN 'de'
-                WHEN {_sql_word_hits(_ES_WORDS)} >= 1 THEN 'es'
+                WHEN {sql_word_hits(_EN_WORDS)} >=
+                     greatest({sql_word_hits(_DE_WORDS)},
+                              {sql_word_hits(_ES_WORDS)}, 1) THEN 'en'
+                WHEN {sql_word_hits(_DE_WORDS)} >=
+                     greatest({sql_word_hits(_ES_WORDS)}, 1) THEN 'de'
+                WHEN {sql_word_hits(_ES_WORDS)} >= 1 THEN 'es'
                 ELSE 'unknown' END AS lang_pred
        FROM documents""",
 )
@@ -142,11 +113,9 @@ def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan shape). Tokenize ONCE into an intermediate array column and
     count membership per family over it — the split is the dominant
     per-row cost and Catalyst does not CSE it across the three
-    _word_hits copies or the repeated CASE branches."""
+    word_hits copies or the repeated CASE branches."""
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id", F.split(_lower_ascii(F.col("text")), _WORD_BREAK).alias("w")
-    )
+    toks = d.select("doc_id", word_split(F.col("text")).alias("w"))
 
     def hits(words: tuple[str, ...]):
         return F.size(F.filter("w", lambda t: t.isin(*words)))
@@ -171,11 +140,11 @@ def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @q(
     "text_fingerprint",
-    """SELECT doc_id,
-              md5(regexp_replace(lower(trim(text, ' ')), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')) AS fingerprint,
+    f"""SELECT doc_id,
+              md5(regexp_replace(lower(trim(text, ' ')), '{WS_RUN}', ' ', 'g')) AS fingerprint,
               list_reduce(
                 list_prepend(CAST(0 AS BIGINT),
-                             list_transform(string_split(regexp_replace(lower(trim(text, ' ')), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g'), ''),
+                             list_transform(string_split(regexp_replace(lower(trim(text, ' ')), '{WS_RUN}', ' ', 'g'), ''),
                                             c -> CAST(ascii(c) AS BIGINT))),
                 (acc, x) -> (acc * 31 + x) % 1000000007) AS rolling_hash
        FROM documents""",
@@ -185,7 +154,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 31-polynomial rolling hash (the canonical content-defined
     fingerprint primitive) — both pure JVM expressions."""
     d = load_table(spark, sf_dir, "documents")
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), "[ \\t\\n\\x0B\\f\\r]+", " ")
+    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), WS_RUN, " ")
     rolling = F.aggregate(
         F.split(norm, ""),
         F.lit(0).cast("long"),
@@ -200,9 +169,9 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @q(
     "corpus_prep_report",
-    """WITH quality AS (
+    f"""WITH quality AS (
          SELECT doc_id, text, lang,
-                len(string_split_regex(trim(text, ' '), '[ \\t\\n\\x0B\\f\\r]+')) AS n_words
+                {sql_ws_count()} AS n_words
          FROM documents WHERE length(text) > 0
        ),
        kept AS (SELECT * FROM quality WHERE n_words BETWEEN 20 AND 80),
@@ -235,7 +204,7 @@ def corpus_prep_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "text",
         "lang",
-        F.size(F.split(F.trim("text"), "[ \\t\\n\\x0B\\f\\r]+")).alias("n_words"),
+        ws_count("text").alias("n_words"),
     ).filter(F.col("n_words").between(20, 80))
     uniq = quality.groupBy(
         F.md5(F.encode("text", "UTF-8")).alias("h")
@@ -254,14 +223,14 @@ def corpus_prep_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @q(
     "text_top_terms",
-    """SELECT doc_id, term, tf, rank FROM (
+    f"""SELECT doc_id, term, tf, rank FROM (
          SELECT doc_id, term, tf,
                 CAST(ROW_NUMBER() OVER (PARTITION BY doc_id
                                         ORDER BY tf DESC, term) AS INT) AS rank
          FROM (
            SELECT doc_id, t AS term, COUNT(*) AS tf
            FROM (
-             SELECT doc_id, UNNEST(string_split_regex(lower(trim(text, ' ')), '[ \\t\\n\\x0B\\f\\r]+')) AS t
+             SELECT doc_id, UNNEST({sql_ws_split(lower=True)}) AS t
              FROM documents
            ) WHERE len(t) >= 4
            GROUP BY doc_id, t
@@ -281,7 +250,7 @@ def text_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf = (
         d.select(
             "doc_id",
-            F.explode(F.split(F.lower(F.trim("text")), "[ \\t\\n\\x0B\\f\\r]+")).alias("term"),
+            F.explode(ws_split("text", lower=True)).alias("term"),
         )
         .filter(F.length("term") >= 4)
         .groupBy("doc_id", "term")
@@ -301,7 +270,7 @@ _CHUNK, _STRIDE = 32, 24
 @q(
     "text_chunk",
     f"""WITH toks AS (
-         SELECT doc_id, string_split_regex(trim(text, ' '), '[ \\t\\n\\x0B\\f\\r]+') AS w
+         SELECT doc_id, {sql_ws_split()} AS w
          FROM documents WHERE length(text) > 0
        )
        SELECT doc_id,
@@ -319,7 +288,7 @@ def text_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-to-N flatMap with no shuffle — at 100 TB this is a map-only
     stage whose output partitioning follows the input's."""
     d = load_table(spark, sf_dir, "documents").filter(F.length("text") > 0)
-    df = d.select("doc_id", F.split(F.trim("text"), "[ \\t\\n\\x0B\\f\\r]+").alias("w")).select(
+    df = d.select("doc_id", ws_split("text").alias("w")).select(
         "doc_id",
         "w",
         F.explode(F.sequence(F.lit(1), F.size("w"), F.lit(_STRIDE))).alias("start"),
@@ -336,8 +305,8 @@ def text_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @q(
     "text_repetition",
-    """WITH t AS (
-         SELECT doc_id, string_split_regex(lower(trim(text, ' ')), '[ \\t\\n\\x0B\\f\\r]+') AS w
+    f"""WITH t AS (
+         SELECT doc_id, {sql_ws_split(lower=True)} AS w
          FROM documents WHERE length(text) > 0
        ), b AS (
          SELECT doc_id, [w[i] || ' ' || w[i+1] for i in range(1, len(w))] AS bi
@@ -359,7 +328,7 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     JVM-side, no UDF, no shuffle."""
     d = load_table(spark, sf_dir, "documents").filter(F.length("text") > 0)
     df = (
-        d.select("doc_id", F.split(F.lower(F.trim("text")), "[ \\t\\n\\x0B\\f\\r]+").alias("w"))
+        d.select("doc_id", ws_split("text", lower=True).alias("w"))
         .filter(F.size("w") >= 2)
         .withColumn(
             "bi",
@@ -384,7 +353,7 @@ _CONTAM_MIN_SHARED = 3  # >=3 shared 3-gram shingles => contaminated
 
 @q(
     "text_contamination",
-    rf"""WITH words AS (SELECT doc_id, string_split_regex(lower(trim(text, ' ')), '[ \t\n\x0B\f\r]+') AS w
+    f"""WITH words AS (SELECT doc_id, {sql_ws_split(lower=True)} AS w
                        FROM documents),
        sh AS (SELECT doc_id,
                      unnest(list_transform(range(1, len(w) - 1),
@@ -413,7 +382,7 @@ def text_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialization); at 100 TB you'd hash them (crc32, as the
     minhash path does) to shrink the broadcast and the groupBy keys."""
     d = load_table(spark, sf_dir, "documents")
-    w = d.select("doc_id", F.split(F.lower(F.trim("text")), "[ \\t\\n\\x0B\\f\\r]+").alias("w")).filter(
+    w = d.select("doc_id", ws_split("text", lower=True).alias("w")).filter(
         F.size("w") >= 3
     )
     sh = w.select(
@@ -550,8 +519,8 @@ def corpus_mix_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @q(
     "text_familiarity",
-    """WITH t AS (
-         SELECT doc_id, string_split_regex(lower(trim(text, ' ')), '[ \\t\\n\\x0B\\f\\r]+') AS w
+    f"""WITH t AS (
+         SELECT doc_id, {sql_ws_split(lower=True)} AS w
          FROM documents WHERE length(text) > 0
        ),
        b AS (
@@ -584,7 +553,7 @@ def text_familiarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     join_salted demonstrates applies directly."""
     d = load_table(spark, sf_dir, "documents").filter(F.length("text") > 0)
     bi = (
-        d.select("doc_id", F.split(F.lower(F.trim("text")), "[ \\t\\n\\x0B\\f\\r]+").alias("w"))
+        d.select("doc_id", ws_split("text", lower=True).alias("w"))
         .filter(F.size("w") >= 2)
         .select(
             "doc_id",
@@ -624,9 +593,9 @@ def text_familiarity(spark: SparkSession, sf_dir: str) -> DataFrame:
                          AND n_stop >= 2
                         THEN 1 ELSE 0 END AS INT) AS keep
        FROM (SELECT doc_id,
-                    len(string_split_regex(trim(text, ' '), '[ \\t\\n\\x0B\\f\\r]+')) AS nw,
-                    length(regexp_replace(text, '[ \\t\\n\\x0B\\f\\r]', '', 'g')) AS na,
-                    {_sql_word_hits(_STOPWORDS)} AS n_stop
+                    {sql_ws_count()} AS nw,
+                    length(regexp_replace(text, '{WS_CLASS}', '', 'g')) AS na,
+                    {sql_word_hits(STOPWORDS)} AS n_stop
              FROM documents WHERE length(trim(text, ' ')) > 0) m""",
 )
 def text_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -648,9 +617,9 @@ def text_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").filter(
         F.length(F.trim("text")) > 0
     )
-    nw = F.size(F.split(F.trim("text"), r"[ \t\n\x0B\f\r]+"))
-    na = F.length(F.regexp_replace("text", r"[ \t\n\x0B\f\r]", ""))
-    n_stop = _word_hits(F.col("text"), _STOPWORDS)
+    nw = ws_count("text")
+    na = F.length(F.regexp_replace("text", WS_CLASS, ""))
+    n_stop = word_hits(F.col("text"), STOPWORDS)
     m = d.select(
         "doc_id",
         nw.alias("nw"),

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.text import sql_ws_count, ws_count
 from ..sources.readers import load_table
 
 from ._base import make_registry
@@ -33,15 +34,11 @@ QUERIES, ORACLE, q = make_registry()
 # document exceeds it at any test SF (docs cap out well under 2048).
 PACK_BUDGET = 2048
 
-# portable whitespace token count — the exact expression pair proven
-# hash-equal by the text_tokens key (text_q.py:40/50)
-_TOK_SQL = r"len(string_split_regex(trim(text, ' '), '[ \t\n\x0B\f\r]+'))"
-
 
 @q(
     "pack_chunks",
     f"""WITH toks AS (
-         SELECT doc_id, {_TOK_SQL} AS n_tok FROM documents
+         SELECT doc_id, {sql_ws_count()} AS n_tok FROM documents
        ),
        offsets AS (
          SELECT doc_id, n_tok,
@@ -80,9 +77,7 @@ def pack_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.windows import global_prefix_sum
 
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id", F.size(F.split(F.trim("text"), r"[ \t\n\x0B\f\r]+")).alias("n_tok")
-    )
+    toks = d.select("doc_id", ws_count("text").alias("n_tok"))
     offsets = global_prefix_sum(toks, ["doc_id"], "n_tok", alias="start_off")
     return (
         offsets.withColumn(
@@ -127,7 +122,7 @@ def pack_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = d.select(
         "doc_id",
         (F.col("doc_id") % N_PACK_SHARDS).cast("int").alias("shard"),
-        F.size(F.split(F.trim("text"), r"[ \t\n\x0B\f\r]+")).alias("n_tok"),
+        ws_count("text").alias("n_tok"),
     )
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -295,7 +290,7 @@ _ASSEMBLE_SHARDS = 8
 @q(
     "corpus_assemble",
     f"""WITH toks AS (
-         SELECT doc_id, md5(text) AS h, {_TOK_SQL} AS n_tok, n_chars
+         SELECT doc_id, md5(text) AS h, {sql_ws_count()} AS n_tok, n_chars
          FROM documents
        ),
        gated AS (
@@ -354,7 +349,7 @@ def corpus_assemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = d.select(
         "doc_id",
         F.md5(F.encode(F.col("text"), "UTF-8")).alias("h"),
-        F.size(F.split(F.trim("text"), r"[ \t\n\x0B\f\r]+")).alias("n_tok"),
+        ws_count("text").alias("n_tok"),
         "n_chars",
     )
     gated = toks.filter(

@@ -30,6 +30,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf, udtf
 
+from ..functions.text import (
+    STOPWORDS,
+    py_word_hits,
+    py_ws_split,
+    sql_word_hits,
+    sql_ws_count,
+    sql_ws_split,
+    ws_token_counts,
+)
 from ..sources.readers import load_events, load_table
 
 from ._base import make_registry
@@ -37,20 +46,10 @@ from ._base import make_registry
 QUERIES, ORACLE, q = make_registry()
 
 
-def ws_token_counts(s: pd.Series) -> pd.Series:
-    """Whitespace token count with EXACTLY the semantics of
-    size(split(trim(text, ' '), '[ \\t\\n\\x0B\\f\\r]+')): trim SPACES only (pandas
-    .str.strip() also eats \n/\t, which would undercount by one on
-    text with leading/trailing non-space whitespace), then tokens =
-    whitespace runs + 1. Shared by the udf_pandas_tokens UDF and the
-    three-way parity property test so the two can never drift."""
-    return s.str.replace(r"^ +| +$", "", regex=True).str.count(r"[ \t\n\x0B\f\r]+") + 1
-
-
 @q(
     "udf_pandas_tokens",
-    r"""SELECT doc_id,
-              len(string_split_regex(trim(text, ' '), '[ \t\n\x0B\f\r]+')) AS n_ws_tokens
+    f"""SELECT doc_id,
+              {sql_ws_count()} AS n_ws_tokens
        FROM documents""",
 )
 def udf_pandas_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -62,11 +61,7 @@ def udf_pandas_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     project; no shuffle. (Defined inside the key: DDL-string return
     types resolve against the active session, so module-import-time
     decoration would need a session that doesn't exist yet.)"""
-
-    @pandas_udf("long")
-    def ws_tokens(s: pd.Series) -> pd.Series:
-        return ws_token_counts(s)
-
+    ws_tokens = pandas_udf(ws_token_counts, "long")
     d = load_table(spark, sf_dir, "documents")
     return d.select("doc_id", ws_tokens(F.col("text")).alias("n_ws_tokens"))
 
@@ -128,9 +123,9 @@ def udaf_momentum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @q(
     "udtf_word_freq",
-    r"""SELECT doc_id, word, CAST(COUNT(*) AS BIGINT) AS n
+    f"""SELECT doc_id, word, CAST(COUNT(*) AS BIGINT) AS n
        FROM (SELECT doc_id,
-                    unnest(string_split_regex(lower(trim(text, ' ')), '[ \t\n\x0B\f\r]+')) AS word
+                    unnest({sql_ws_split(lower=True)}) AS word
              FROM documents)
        WHERE word <> ''
        GROUP BY doc_id, word""",
@@ -148,15 +143,11 @@ def udtf_word_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     @udtf(returnType="word string, n bigint")
     class WordFreq:
         def eval(self, text: str):
-            import re
             from collections import Counter
 
             if text is None:
                 return
-            # the shared explicit ASCII class — Python's argless
-            # .split() is UNICODE whitespace (NBSP, \x1c-\x1f, NEL)
-            # and would silently diverge from the oracle's class
-            toks = re.split(r"[ \t\n\x0B\f\r]+", text.strip(" ").lower())
+            toks = py_ws_split(text, lower=True)
             for w, n in Counter(t for t in toks if t).items():
                 yield w, n
 
@@ -312,17 +303,8 @@ def pandas_api_groupby(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @q(
     "udf_pandas_iter_score",
-    # ASCII-\b-equivalent stopword count (see text_q._sql_word_hits:
-    # Python/Java/RE2 \b all disagree on non-ASCII neighbours)
-    """SELECT doc_id,
-              CAST(10 * len(list_filter(
-                         string_split_regex(
-                           translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ',
-                                           'abcdefghijklmnopqrstuvwxyz'),
-                           '[^a-z0-9_]+'),
-                         t -> t IN ('the', 'a', 'an', 'and', 'of', 'to',
-                                    'in', 'is', 'on', 'for')))
-                   + length(text) % 7 AS BIGINT) AS score
+    f"""SELECT doc_id,
+              CAST(10 * {sql_word_hits(STOPWORDS)} + length(text) % 7 AS BIGINT) AS score
        FROM documents""",
 )
 def udf_pandas_iter_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -331,8 +313,9 @@ def udf_pandas_iter_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-worker setup (loading a model, opening a connection) runs ONCE
     before the loop and every Arrow batch of the partition reuses it,
     where the plain scalar tier would re-enter Python state per batch.
-    The "model" here is a deterministic stopword scorer (weights
-    compiled into a regex) so the key stays oracle-checkable; swap the
+    The "model" here is a deterministic stopword scorer (the ASCII
+    word rule of ``functions/text.py``) so the key stays
+    oracle-checkable; swap the
     setup line for a real model load and the plan — scan ->
     ArrowEvalPython -> project, no shuffle — is exactly the 100 TB
     batch-scoring shape (pair with
@@ -342,27 +325,11 @@ def udf_pandas_iter_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     applyInPandasWithState / UDTF / mapInArrow / applyInArrow."""
     @pandas_udf("long")
     def score(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        import re
-
-        # per-worker setup, amortized over every batch of the partition.
-        # Explicit ASCII word-break, NOT \b, and ASCII-only lowercase,
-        # NOT str.lower(): Python's \b/\w are unicode (Java's/RE2's
-        # each differ again), and unicode case mapping itself is
-        # engine-specific ('İ' → 'i̇' here vs 'i' in DuckDB) — tokens
-        # are maximal [a-z0-9_] runs after translate(A-Z, a-z),
-        # membership counted against the stopword set
-        br = re.compile(r"[^a-z0-9_]+")
-        lo = str.maketrans(
-            "ABCDEFGHIJKLMNOPQRSTUVWXYZ", "abcdefghijklmnopqrstuvwxyz"
-        )
-        stop = frozenset(
-            ("the", "a", "an", "and", "of", "to", "in", "is", "on", "for")
-        )
+        # per-worker setup, amortized over every batch of the partition
+        stop = frozenset(STOPWORDS)
         for s in batches:
             hits = s.map(
-                lambda x: sum(t in stop for t in br.split(x.translate(lo)))
-                if isinstance(x, str)
-                else None
+                lambda x: py_word_hits(x, stop) if isinstance(x, str) else None
             )
             yield 10 * hits + s.str.len() % 7
 

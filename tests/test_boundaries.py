@@ -317,10 +317,10 @@ def test_containment_catches_subset_pair_jaccard_misses(spark):
 
 
 def test_shingle_kernel_matches_duckdb_on_adversarial_whitespace(spark):
-    """The Arrow shingle kernel must tokenize EXACTLY like the DuckDB
-    oracle expression (string_split_regex(lower(trim(text, ' ')), '[ \\t\\n\\x0B\\f\\r]+'))
-    on text the fixed corpus never contains: trailing newlines/tabs,
-    leading whitespace, whitespace-only and empty strings. A previous
+    """The Arrow shingle kernel must shingle EXACTLY like the DuckDB
+    oracles' shared ``_SHINGLE_CTE`` on text the fixed corpus never
+    contains: trailing newlines/tabs, leading whitespace,
+    whitespace-only and empty strings. A previous
     kernel revision popped trailing empty tokens "Java-style" while
     both DuckDB and F.split keep them — invisible on the clean corpus,
     a guaranteed driver hash-fail the round the corpus gains a
@@ -328,7 +328,7 @@ def test_shingle_kernel_matches_duckdb_on_adversarial_whitespace(spark):
     import duckdb
     import pandas as pd
 
-    from big_data_analysis_project_spark.registry.dedup_q import _shingles
+    from big_data_analysis_project_spark.registry.dedup_q import _SHINGLE_CTE, _shingles
 
     texts = [
         "alpha beta gamma delta\n",
@@ -354,21 +354,8 @@ def test_shingle_kernel_matches_duckdb_on_adversarial_whitespace(spark):
 
     pdf = pd.DataFrame(rows, columns=["doc_id", "text"])
     conn = duckdb.connect()
-    conn.register("docs_adv", pdf)
-    want = set(
-        conn.execute(
-            r"""
-            WITH words AS (
-              SELECT doc_id,
-                     string_split_regex(lower(trim(text, ' ')), '[ \t\n\x0B\f\r]+') AS w
-              FROM docs_adv
-            )
-            SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS s
-            FROM words, LATERAL unnest(range(1, len(w) - 1)) AS t(i)
-            WHERE len(w) >= 3
-            """
-        ).fetchall()
-    )
+    conn.register("documents", pdf)
+    want = set(conn.execute(f"{_SHINGLE_CTE} SELECT doc_id, s FROM sh").fetchall())
     assert got == want, (got - want, want - got)
 
 

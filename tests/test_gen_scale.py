@@ -10,6 +10,8 @@ from pathlib import Path
 
 from pyspark.sql import functions as F
 
+from big_data_analysis_project_spark.functions.text import ws_count
+
 sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
 
 from .conftest import SF_SMOKE
@@ -53,7 +55,7 @@ def test_gen_scale_structure(spark, tmp_path_factory):
     # DISJOINT across replicas (the anti-blowup property), replica 0
     # verbatim
     docs = rd("documents")
-    ntok = F.size(F.split(F.trim("text"), r"[ \t\n\x0B\f\r]+"))
+    ntok = ws_count("text")
     doc_stride = base("documents").agg(F.max("doc_id")).collect()[0][0] + 1
     toks = docs.select(
         (F.col("doc_id") % doc_stride).alias("orig"),
